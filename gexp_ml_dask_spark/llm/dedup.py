@@ -5,16 +5,26 @@ Five dedup strategies a training-data pipeline needs, ordered by
 cost/recall tradeoff:
 
   exact        sha2 hash-groupBy              one shuffle, exact
-  ngram        shingle self-join Jaccard      exact near-dup, O(pairs
-                                              sharing a shingle)
+  setsim       one AllPairs kernel for exact  exact near-dup, O(pairs
+               Jaccard / containment / tf     sharing a token)
+               cosine (setsim_pairs)
   minhash_lsh  MLlib MinHashLSH               approx Jaccard, scales
   simhash      per-doc bit-majority signature one shuffle + equality
                                               (or banded) join
   embedding    cosine over vectors            semantic near-dup
 
-At 100 TB: exact and simhash are single-shuffle; ngram/embedding
-brute pairs need blocking (LSH band buckets / IVF) — the *_candidates
-forms here take a blocking column for that reason.
+setsim_pairs has three routes (inverted posting join, AllPairs prefix
+filter, dense tiled GEMM for cosine) that emit identical rows. It has
+no route options: one gate reads the data (a bounded doc count, then
+one probe of vocabulary density and the hottest token's doc share)
+against the module constants GATE_MIN_DOCS, PROBE_DOCS,
+DENSE_MAX_VOCAB, DENSE_MIN_DENSITY and PREFIX_MIN_HOT_SHARE. The
+routes are public (setsim_inverted / setsim_prefix / setsim_dense) so
+forced twins and parity tests can pin each one.
+
+At 100 TB: exact and simhash are single-shuffle; pair joins need
+blocking (LSH band buckets / IVF) — setsim_pairs and the embedding
+form take a blocking column for that reason.
 
 Persist lifecycle: the pair-join operators persist their shingle /
 posting intermediates (MEMORY_AND_DISK) because BOTH join sides
@@ -29,6 +39,8 @@ each iteration with clearCache.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -77,287 +89,545 @@ def shingles(text_col: str, n: int = 3, sep: str = " ") -> F.Column:
     return F.when(F.col(text_col).isNotNull(), F.array_distinct(grams))
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.4,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = None,
-) -> DataFrame:
-    """OP-LLM-02 (exact n-gram Jaccard) — near-dup pairs with
-    jaccard >= threshold.
+# ---------------------------------------------------------------------
+# Exact pair similarity: ONE AllPairs kernel (Bayardo/Ma/Srikant,
+# WWW'07) for Jaccard, containment and TF-cosine. A measure is a row
+# of MEASURES (token builder, magnitude, score, prefix predicate, pair
+# filter); a route (inverted / prefix / dense) is written once and
+# serves every measure; setsim_pairs picks the route from the data.
+# Every route emits bit-identical rows: the dot is an integer sum (or
+# an integer-exact GEMM) and ONE _score rounds and filters it.
+# ---------------------------------------------------------------------
 
-    |A∩B| comes from a self-join on exploded distinct shingles (only
-    pairs sharing >=1 shingle are ever materialized — the classic
-    inverted-index join); |A∪B| = |A|+|B|-|A∩B|. ``block_col``
-    restricts candidates to a blocking key (e.g. an LSH band or
-    source partition) — mandatory at 100 TB, where a hot shingle
-    otherwise fans out quadratically.
+# Gate constants (module-level, not options: tests that need a
+# boundary monkeypatch them).
+GATE_MIN_DOCS = 20_000  # below this the inverted join wins at any shape
+PROBE_DOCS = 10_000  # id-contiguous sample the route probe reads
+DENSE_MAX_VOCAB = 4_096  # densify memory bound (chunk x vocab doubles)
+DENSE_MIN_DENSITY = 0.2  # posting fill fraction that routes to dense
+PREFIX_MIN_HOT_SHARE = 0.5  # doc share of the hottest token -> prefix
+DENSE_CHUNK = 2_048  # docs per dense tile side
+_EPS = 1.0e-6  # round(s, 6) >= t admits s >= t - 5e-7
 
-    Measured alternative, rejected: an LSH-bucket-style posting-list
-    form (groupBy shingle -> collect_list -> row-local pair explode,
-    one less shuffle) produced the identical pair set but ran 2x
-    SLOWER at sf0.1 (4.5 s vs 2.3 s same-host A/B) — the pair
-    explosion runs as interpreted higher-order functions while the
-    shuffle join stays in codegen, and that dominates the saved
-    exchange.
-    """
-    # Materialize the shingle array ONCE per document before the
-    # explode. Writing size(shingles(..)) and explode(shingles(..))
-    # in one select plans the size() into a Project ABOVE the
-    # Generate, re-evaluating the whole interpreted higher-order
-    # shingle expression per exploded row — measured 31s -> <2s at
-    # sf0.01 for this query. The intermediate projection pins the
-    # expensive expression below the Generate; size() above it reads
-    # the materialized array attribute.
-    shingled = docs.select(
-        F.col(id_col),
-        shingles(text_col, n).alias("_shs"),
-        *([F.col(block_col)] if block_col else []),
+
+def _shingle_tokens(d: DataFrame, n: int) -> DataFrame:
+    """Distinct n-gram shingles, weight 1, magnitude |A|. The shingle
+    array is materialized in its own projection BEFORE the explode:
+    writing size(shingles(..)) next to explode(shingles(..)) plans the
+    size() above the Generate and re-evaluates the interpreted
+    higher-order shingle expression per exploded row (measured 31 s ->
+    <2 s at sf0.01). explode_outer + a null filter, not explode: an
+    inner explode of the attribute makes the optimizer infer
+    size(_shs) > 0 and push it through the projection, evaluating the
+    whole shingle expression a second time below any upstream
+    repartition, on one core (measured 2 s of 13 at sf0.1)."""
+    blk = [c for c in d.columns if c == "_blk"]
+    shs = d.select("_id", shingles("_text", n).alias("_shs"), *blk)
+    return shs.select(
+        "_id",
+        F.explode_outer("_shs").alias("_tok"),
+        F.lit(1).alias("_w"),
+        F.size("_shs").alias("_m"),
+        *blk,
+    ).filter(F.col("_tok").isNotNull())
+
+
+def _tf_tokens(d: DataFrame, n: int) -> DataFrame:
+    """Space-split terms (empty tokens dropped), weight tf, magnitude
+    the L2 norm. The norm table is per DOC, so no broadcast hint: AQE
+    picks broadcast-hash only while that side is actually small.
+    Docs are hash-partitioned by id BEFORE the explode: the tf and
+    norm aggregates and their join then need no further exchange, and
+    every posting of a doc lands in one partition, so the inverted
+    join's partial aggregate collapses each pair map-side (sf0.1
+    inverted route 121-126 s -> 54 s, same session, same rows)."""
+    blk = [c for c in d.columns if c == "_blk"]
+    tf = (
+        d.repartition("_id")
+        .select("_id", F.explode(F.split("_text", " ")).alias("_tok"), *blk)
+        .filter(F.col("_tok") != "")
+        .groupBy("_id", "_tok", *blk)
+        .agg(F.count(F.lit(1)).alias("_w"))
     )
-    exploded = shingled.select(
-        F.col(id_col),
-        F.size("_shs").alias("_nsh"),
-        F.explode("_shs").alias("_sh"),
-        *( [F.col(block_col)] if block_col else [] ),
+    nrm = tf.groupBy("_id").agg(
+        F.sqrt(F.sum(F.col("_w") * F.col("_w"))).alias("_m")
     )
-    # The exploded postings list (the inverted index) feeds BOTH
-    # sides of the self-join; without a persist each side re-runs
-    # the scan + interpreted higher-order shingle pipeline — the
-    # single most expensive expression here (measured 2× the whole
-    # join cost at sf0.1). MEMORY_AND_DISK: the index spills rather
-    # than OOMs at scale.
+    return tf.join(nrm, "_id")
+
+
+def _set_prefix(suf, m, t):
+    # AllPairs set prefix: a partner at >= t must share a token within
+    # the first m - floor(t*m) + 1 rarest, i.e. where the suffix count
+    # is >= floor(t*m). t is already slackened, so the bound covers
+    # the round(., 6) admission band for documents of ANY size.
+    return suf >= F.floor(F.lit(t) * m)
+
+
+class _Measure(NamedTuple):
+    tokens: Callable  # (normalized docs, n) -> (_id, _tok, _w, _m[, _blk])
+    score: Callable  # (dot, m_a, m_b) -> similarity
+    in_prefix: Callable  # (suffix sum of w^2, m, slackened t) -> keep
+    pair_ok: Callable  # (alias a, alias b, slackened t) -> candidate ok
+    one_sided: bool  # prefix x FULL postings (else prefix x prefix)
+    dense: bool  # the tiled-GEMM route applies
+
+
+def _m(alias: str) -> F.Column:
+    return F.col(f"{alias}._m")
+
+
+MEASURES = {
+    # J = |A∩B| / (|A|+|B|-|A∩B|). Size filter: J <= min/max, so a
+    # qualifying pair has min(|A|,|B|) >= t * max(|A|,|B|).
+    "jaccard": _Measure(
+        _shingle_tokens,
+        lambda dot, a, b: dot / (a + b - dot),
+        _set_prefix,
+        lambda a, b, t: F.least(_m(a), _m(b)) >= t * F.greatest(_m(a), _m(b)),
+        one_sided=False,
+        dense=False,
+    ),
+    # Overlap coefficient |A∩B| / min(|A|,|B|): flags near-SUBSET
+    # duplicates (quote inclusion, boilerplate wrapping) that Jaccard
+    # under-scores. One-sided bound: the overlap needs >= t*|S| of the
+    # SMALLER set S, so S's own-size prefix must meet the other doc's
+    # FULL postings — hence the size orientation as the pair filter.
+    "containment": _Measure(
+        _shingle_tokens,
+        lambda dot, a, b: dot / F.least(a, b),
+        _set_prefix,
+        lambda a, b, t: _m(a) <= _m(b),
+        one_sided=True,
+        dense=False,
+    ),
+    # tf cosine. L2 prefix: with a global rarest-first order and s(i)
+    # the L2 mass of a unit vector from position i on, Cauchy-Schwarz
+    # at the FIRST shared term w gives cos <= s_a(w) * s_b(w) <= s(w),
+    # so w lies in both prefixes {i : s(i) >= t} and the prefix x
+    # prefix join is lossless. The pair filter is the PPJoin-style
+    # positional bound at that w, in squared masses and loosened to
+    # s_a(w)^2 s_b(w)^2 >= t^4 (<= t^2): it prunes only duplicate
+    # candidate edges, never a pair's first-shared-term edge. The 1e-9
+    # terms cover float accumulation.
+    "cosine": _Measure(
+        _tf_tokens,
+        lambda dot, a, b: dot / (a * b),
+        lambda suf, m, t: suf >= (t * t - 1.0e-9) * m * m,
+        lambda a, b, t: F.col(f"{a}._suf") * F.col(f"{b}._suf")
+        >= (t**4 - 1.0e-9) * _m(a) * _m(a) * _m(b) * _m(b),
+        one_sided=False,
+        dense=True,
+    ),
+}
+
+
+def _tokens(docs, measure, n, id_col, text_col, block_col) -> DataFrame:
+    """The measure's (doc, token, weight, magnitude) postings,
+    persisted MEMORY_AND_DISK: both join sides consume them, and
+    without the persist each side re-runs the scan + tokenizer
+    (measured 2x the whole join cost at sf0.1; release contract in
+    the module docstring)."""
     from pyspark.storagelevel import StorageLevel
 
-    exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    left = exploded.alias("a")
-    right = exploded.alias("b")
-    join_cond = (F.col("a._sh") == F.col("b._sh")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    d = docs.select(
+        F.col(id_col).alias("_id"),
+        F.col(text_col).alias("_text"),
+        *([F.col(block_col).alias("_blk")] if block_col else []),
     )
-    if block_col:
-        join_cond = join_cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    inter = (
-        left.join(right, join_cond)
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a._nsh").alias("_na"),
-            F.col("b._nsh").alias("_nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("_ni"))
-    )
-    jac = F.col("_ni") / (F.col("_na") + F.col("_nb") - F.col("_ni"))
+    return MEASURES[measure].tokens(d, n).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _score(pairs: DataFrame, measure: str, threshold: float) -> DataFrame:
+    """(id_a, id_b, _ma, _mb, _dot) -> (id_a, id_b, <measure>) rows
+    with round(score, 6) >= threshold — the ONE admission rule every
+    route shares, so cross-route parity is structural."""
+    s = MEASURES[measure].score(F.col("_dot"), F.col("_ma"), F.col("_mb"))
     return (
-        inter.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        pairs.withColumn(measure, F.round(s, 6))
+        .filter(F.col(measure) >= threshold)
+        .select("id_a", "id_b", measure)
     )
 
 
-def ngram_jaccard_pairs_prefix(
+def _side(tok: DataFrame, s: str) -> DataFrame:
+    """One side of a pair join: id_<s>, _tok, _m<s>, _w<s>[, _blk]."""
+    return tok.withColumnsRenamed(
+        {"_id": f"id_{s}", "_m": f"_m{s}", "_w": f"_w{s}"}
+    )
+
+
+def _dot_pairs(joined: DataFrame) -> DataFrame:
+    # Keyed on the ids only; max() carries the per-id magnitudes.
+    # Keying on them too hashes two more fields per joined row
+    # (measured 6-7% of a hot-vocabulary cosine join). Not first():
+    # it is nondeterministic, which stops Spark reusing the pair
+    # table's exchanges when a caller joins it to itself.
+    return joined.groupBy("id_a", "id_b").agg(
+        F.sum(F.col("_wa") * F.col("_wb")).alias("_dot"),
+        F.max("_ma").alias("_ma"),
+        F.max("_mb").alias("_mb"),
+    )
+
+
+def setsim_inverted(
     docs: DataFrame,
-    threshold: float = 0.4,
+    measure: str,
+    threshold: float,
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     block_col: str | None = None,
 ) -> DataFrame:
-    """OP-LLM-02 (exact n-gram Jaccard, prefix-filtered) — the EXACT
-    same pair set as :func:`ngram_jaccard_pairs`, computed with
-    AllPairs prefix filtering (Bayardo/Ma/Srikant, WWW'07) instead of
-    a full inverted-index self-join.
+    """Inverted route: posting self-join, then sum(w_a * w_b) per
+    pair — only pairs sharing a token ever materialize. Cost is the
+    sum over tokens of df(token)^2: one hot token fans out
+    quadratically. Measured alternative, rejected: a posting-list
+    collect_list + row-local pair explode produced the identical pairs
+    2x SLOWER at sf0.1 (interpreted higher-order functions vs a
+    codegen shuffle join)."""
+    tok = _tokens(docs, measure, n, id_col, text_col, block_col)
+    on = ["_tok", "_blk"] if block_col else ["_tok"]
+    joined = _side(tok, "a").join(_side(tok, "b"), on)
+    pairs = joined.filter(F.col("id_a") < F.col("id_b"))
+    return _score(_dot_pairs(pairs), measure, threshold)
 
-    Why: the unblocked self-join's cost is sum over shingles of
-    df(shingle)^2 — one hot shingle fans out quadratically at 100 TB.
-    Prefix filtering is a LOSSLESS block: order every doc's shingles
-    by ascending global frequency; if J(A,B) >= t, A and B must share
-    a shingle within each one's first ``n_sh - ceil(t*n_sh) + 1``
-    shingles in that order. Only prefixes enter the index, so hot
-    (most frequent) shingles land in the suffix and never join;
-    candidates are then verified with one exact ``array_intersect``
-    per pair against the full shingle arrays.
 
-    Guarantees recall 1.0 (it is a theorem, not an LSH probability),
-    so this is safe to substitute anywhere the DuckDB oracle checks
-    the exact pair/cluster output — the identical-pair-set parity vs
-    the inverted-index form is pinned in
-    tests/test_llm_ops.py::test_prefix_jaccard_identical_pairs
-    (sf0.001 corpus + a planted hot-shingle fixture). The admission
-    band of round(jac, 6) >= t is jac >= t - 5e-7, so BOTH the size
-    filter and the prefix length are derived from the slackened
-    threshold (t - 1e-6): the prefix bound uses
-    floor((t - eps) * n_sh), which is <= ceil((t - 5e-7) * n_sh) for
-    every document size, keeping losslessness size-independent (no
-    reliance on a +1 slack that a >2M-shingle document would outgrow).
+def setsim_prefix(
+    docs: DataFrame,
+    measure: str,
+    threshold: float,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    block_col: str | None = None,
+) -> DataFrame:
+    """Prefix route (AllPairs): order each doc's tokens rarest-first
+    by one global document frequency, keep the prefix the measure's
+    bound says any qualifying partner must meet, join prefixes into
+    candidates, then verify each candidate exactly. Recall is 1.0 by
+    theorem, not by probability; hot tokens land in the suffix and
+    never enter the index. Blocking composes: the order stays global
+    (any single total order preserves the bound).
 
-    ``block_col`` composes: candidates are additionally required to
-    agree on the blocking key (the same contract as
-    :func:`ngram_jaccard_pairs`). The frequency order stays global —
-    any single total order preserves the theorem; blocking only
-    shrinks the candidate space further.
+    The prefix keeps positions whose suffix mass (sum of w^2 from the
+    position to the end) clears the measure's bound; it is a running
+    sum in DESCENDING order, so the window frame is O(len) per doc.
+    Bounds use t - 1e-6, covering the round(s, 6) >= t band.
 
-    Scale posture: the extra global frequency pass is one partial-agg
-    shuffle; the verify joins are shuffles on doc_id (candidate-count
-    sized, not pair-fanout sized). At bench scale the unblocked join
-    is faster on wall-clock (see BASELINE.md "prefix vs inverted
-    Jaccard" A/B) because this corpus has no hot shingles — at 100 TB
-    with Zipf shingle frequencies the prefix index is the only shape
-    that survives.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    eps = 1.0e-6  # round(jac, 6) >= t admits jac >= t - 5e-7
-    shingled = docs.select(
-        F.col(id_col),
-        shingles(text_col, n).alias("_shs"),
-        *([F.col(block_col)] if block_col else []),
-    ).withColumn("_nsh", F.size("_shs"))
-    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-
-    ex = shingled.select(
-        id_col,
-        "_nsh",
-        F.explode("_shs").alias("_sh"),
-        *([F.col(block_col)] if block_col else []),
+    Measured (BASELINE.md): 58.0 -> 11.8 s for Jaccard on a
+    hot-header corpus and 82.5 -> 3.8 s for TF-cosine on a Zipf
+    fixture; on a corpus whose docs all share one tiny vocabulary
+    every lossless sparse filter stays ~quadratic and the inverted
+    join (or, for cosine, the dense route) wins."""
+    m = MEASURES[measure]
+    t = threshold - _EPS
+    tok = _tokens(docs, measure, n, id_col, text_col, block_col)
+    w = (
+        Window.partitionBy("_id")
+        .orderBy(F.desc("_df"), F.desc("_tok"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    freq = ex.groupBy("_sh").agg(F.count(F.lit(1)).alias("_df"))
-    # Rank each doc's shingles rarest-first; keep only the prefix
-    # that any >=t partner must intersect. The bound is derived from
-    # the slackened admission threshold (t - eps), so it covers the
-    # round(., 6) semantics for documents of ANY size.
-    w = Window.partitionBy(id_col).orderBy("_df", "_sh")
+    sq = F.col("_w").cast("double") * F.col("_w")
+    # Document frequency as a window over the token: one exchange of
+    # the postings, where a frequency aggregate joined back costs two.
+    by_tok = Window.partitionBy("_tok")
     prefix = (
-        ex.join(freq, "_sh")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(
-            F.col("_rn")
-            <= F.col("_nsh")
-            - F.floor((F.lit(threshold) - F.lit(eps)) * F.col("_nsh"))
-            + 1
-        )
-        .select(
-            id_col, "_nsh", "_sh", *([F.col(block_col)] if block_col else [])
-        )
+        tok.withColumn("_df", F.count(F.lit(1)).over(by_tok))
+        .withColumn("_suf", F.sum(sq).over(w))
+        .filter(m.in_prefix(F.col("_suf"), F.col("_m"), t))
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # Size filter: J <= min(na,nb)/max(na,nb), so qualifying pairs
-    # satisfy least >= (t - eps) * greatest.
-    cand_cond = (
-        (F.col("a._sh") == F.col("b._sh"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (
-            F.least(F.col("a._nsh"), F.col("b._nsh"))
-            >= (threshold - eps)
-            * F.greatest(F.col("a._nsh"), F.col("b._nsh"))
-        )
-    )
+    p, f = prefix.alias("p"), (tok if m.one_sided else prefix).alias("f")
+    on = (F.col("p._tok") == F.col("f._tok")) & m.pair_ok("p", "f", t)
     if block_col:
-        cand_cond = cand_cond & (
-            F.col(f"a.{block_col}") == F.col(f"b.{block_col}")
-        )
+        on = on & (F.col("p._blk") == F.col("f._blk"))
+    order = (
+        F.col("p._id") != F.col("f._id")
+        if m.one_sided
+        else F.col("p._id") < F.col("f._id")
+    )
     cand = (
-        a.join(b, cand_cond)
+        p.join(f, on & order)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.least("p._id", "f._id").alias("id_a"),
+            F.greatest("p._id", "f._id").alias("id_b"),
         )
         .distinct()
     )
-    sa = shingled.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_shs").alias("_shs_a"),
-        F.col("_nsh").alias("_na"),
+    joined = cand.join(_side(tok, "a"), "id_a").join(
+        _side(tok, "b").drop("_blk"), ["id_b", "_tok"]
     )
-    sb = shingled.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_shs").alias("_shs_b"),
-        F.col("_nsh").alias("_nb"),
-    )
-    ni = F.size(F.array_intersect("_shs_a", "_shs_b"))
-    jac = ni / (F.col("_na") + F.col("_nb") - ni)
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _score(_dot_pairs(joined), measure, threshold)
 
 
-JACCARD_STRATEGY_CONF = "spark.gexp_ml.jaccard.strategy"
-
-
-def _resolve_pair_strategy(
+def setsim_dense(
     docs: DataFrame,
-    conf_key: str,
-    strategy: str | None,
-    size_hint: int | None,
-    size_gate: int,
-) -> str:
-    """ONE lazy resolution rule for every pair-operator strategy gate
-    (jaccard / tf-cosine / containment — a gate edit lands in all
-    three or none). No Spark job runs here. Order: explicit
-    ``strategy`` ("inverted" | "prefix"), the session conf (how a
-    100 TB pipeline flips every call site at once), ``size_hint`` (a
-    caller-known doc count, e.g. from table stats) vs ``size_gate``,
-    default "inverted" — right for oracle/bench scale."""
-    if strategy is None:
-        strategy = docs.sparkSession.conf.get(conf_key, "auto")
-    if strategy == "auto":
-        strategy = (
-            "prefix"
-            if size_hint is not None and size_hint > size_gate
-            else "inverted"
-        )
-    if strategy not in ("inverted", "prefix"):
-        raise ValueError(f"unknown {conf_key} strategy: {strategy}")
-    return strategy
-
-
-def ngram_jaccard_pairs_auto(
-    docs: DataFrame,
-    threshold: float = 0.4,
+    measure: str,
+    threshold: float,
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     block_col: str | None = None,
-    strategy: str | None = None,
-    size_hint: int | None = None,
-    size_gate: int = 1_000_000,
 ) -> DataFrame:
-    """OP-LLM-02 — strategy-gated exact Jaccard pairs. Both physical
-    forms produce the IDENTICAL pair set (pinned in
-    tests/test_llm_ops.py::test_prefix_jaccard_identical_pairs), so
-    the gate is purely a physical choice: at bench scale the
-    inverted-index join wins on wall-clock (sf0.1 same-host A/B in
-    BASELINE.md, "prefix vs inverted Jaccard"), while at 100 TB the
-    prefix index is the only shape without a hot-shingle quadratic
-    fan-out.
+    """Dense route (cosine only): the exact pair set as a tiled dense
+    matrix product, for the regime where every lossless sparse filter
+    degenerates — a tiny shared vocabulary makes candidates ~quadratic
+    (BASELINE.md dense-corpus note). Sign-LSH was measured and
+    rejected for it: on all-positive tf vectors it needs ~25% of ALL
+    pairs as candidates for 95% recall, because the collision S-curve
+    between cosine 0.62 and 0.9 is flat on the positive orthant. A
+    lossless GEMM does the same quadratic work at BLAS constants and
+    keeps recall 1.0, so the route stays value-oracled.
 
-    The gate is LAZY — no Spark job runs at plan-build time.
-    Resolution order:
+    Plan: (1) a bounded vocabulary index — more than DENSE_MAX_VOCAB
+    distinct terms raises ValueError (the corpus is sparse; the gate
+    falls back); (2) per-doc sparse vectors in doc_id-contiguous
+    chunks of DENSE_CHUNK via the distributed global_rank (no
+    partitionless window); (3) EXACT tile pruning by two intersected
+    bounds on driver-sized chunk x vocab stats: the spherical triangle
+    inequality (angle(a,b) >= angle(c_i,c_j) - r_i - r_j) and the
+    nonnegativity bound cos(a,b) <= sum_t maxw_it * maxw_jt, which
+    kills vocabulary-disjoint tiles wide radii let through; (4)
+    surviving tiles -> applyInPandas integer-exact GEMM emitting a
+    slack superset with the Spark-side norms; (5) the shared _score
+    rounds and filters, so admission is bit-identical to the sparse
+    routes.
 
-    1. explicit ``strategy`` argument (``"inverted"`` | ``"prefix"``);
-    2. the session conf ``spark.gexp_ml.jaccard.strategy`` (same
-       values — how a 100 TB pipeline flips every call site at once);
-    3. ``size_hint`` (a caller-known document count, e.g. from table
-       stats) vs ``size_gate``;
-    4. default ``"inverted"`` — right for oracle/bench scale; large
-       deployments set the conf or pass the hint.
+    Scale: exact dense similarity is O(n^2 V) work on any engine; the
+    tiles are embarrassingly parallel (no shuffle after chunking) and
+    block-pure chunks prune every cross-block tile (BASELINE.md
+    Round-7, sf1). Past ~10^4 chunks the quadratic is intrinsic and
+    the approximate family (embedding LSH/IVF) is the honest tool."""
+    import numpy as np
+    import pandas as pd
 
-    ``block_col`` is forwarded to either form unchanged.
+    from gexp_ml_dask_spark.operators.sorts import global_rank
+
+    if not MEASURES[measure].dense or block_col:
+        raise ValueError(f"dense route serves unblocked cosine, not {measure}")
+    spark = docs.sparkSession
+    tok = _tokens(docs, measure, n, id_col, text_col, None)
+    # One bounded collect both checks the densify bound and fetches
+    # the vocabulary (nothing vocab-sized reaches the driver past it).
+    distinct = tok.select("_tok").distinct().limit(DENSE_MAX_VOCAB + 1)
+    terms = sorted(r[0] for r in distinct.collect())
+    if len(terms) > DENSE_MAX_VOCAB:
+        tok.unpersist()
+        raise ValueError(
+            f"setsim_dense: vocabulary exceeds {DENSE_MAX_VOCAB} terms; "
+            "this corpus is sparse"
+        )
+    V = len(terms)
+    vocab = spark.createDataFrame(
+        list(zip(terms, range(V))), "_tok string, tid int"
+    )
+    tfj = tok.join(F.broadcast(vocab), "_tok")
+    docvec = (
+        tfj.groupBy("_id")
+        .agg(
+            F.collect_list(F.struct("tid", "_w")).alias("_p"),
+            F.first("_m").alias("_m"),
+        )
+        .select(
+            "_id",
+            F.col("_p.tid").alias("tids"),
+            F.col("_p._w").alias("tfs"),
+            "_m",
+        )
+    )
+    ranked = global_rank(docvec, "_id", "_id", out_col="_rank")
+    docvec = ranked.withColumn(
+        "chunk_id", F.floor((F.col("_rank") - 1) / DENSE_CHUNK).cast("int")
+    ).drop("_rank").persist()
+
+    # Chunk geometry: unit-weight centroid sums and max weights per
+    # (chunk, tid), then each chunk's min cosine to its own centroid
+    # (= max angular radius). Two collects read `unit`, so it persists.
+    unit = (
+        tfj.join(docvec.select("_id", "chunk_id"), "_id")
+        .select(
+            "_id", "chunk_id", "tid", (F.col("_w") / F.col("_m")).alias("_u")
+        )
+        .persist()
+    )
+    cpdf = (
+        unit.groupBy("chunk_id", "tid")
+        .agg(F.sum("_u").alias("_s"), F.max("_u").alias("_mx"))
+        .toPandas()
+    )
+    k = int(cpdf["chunk_id"].max()) + 1 if len(cpdf) else 0
+    ci, ti = cpdf["chunk_id"].to_numpy(), cpdf["tid"].to_numpy()
+    C, Mx = np.zeros((k, V)), np.zeros((k, V))
+    C[ci, ti], Mx[ci, ti] = cpdf["_s"].to_numpy(), cpdf["_mx"].to_numpy()
+    cn = np.linalg.norm(C, axis=1)
+    cn[cn == 0] = 1.0
+    Cu = C / cn[:, None]
+    cen = spark.createDataFrame(
+        pd.DataFrame({"chunk_id": ci, "tid": ti, "_c": cpdf["_s"] / cn[ci]})
+    )
+    mincos = (
+        unit.join(cen, ["chunk_id", "tid"])
+        .groupBy("_id", "chunk_id")
+        .agg(F.sum(F.col("_u") * F.col("_c")).alias("_cos"))
+        .groupBy("chunk_id")
+        .agg(F.min("_cos").alias("_min_cos"))
+        .toPandas()
+    )
+    unit.unpersist()
+    radius = np.zeros(k)
+    radius[mincos["chunk_id"].to_numpy()] = np.arccos(
+        np.clip(mincos["_min_cos"].to_numpy(), -1.0, 1.0)
+    )
+    theta = np.arccos(np.clip(Cu @ Cu.T, -1.0, 1.0))
+    best = np.cos(np.maximum(0.0, theta - radius[:, None] - radius[None, :]))
+    best = np.minimum(best, Mx @ Mx.T)
+    tt = threshold - _EPS
+    ii, jj = np.where(np.triu(best >= tt))
+    tiles = spark.createDataFrame(
+        pd.DataFrame({"ci": ii, "cj": jj}).astype("int32")
+    )
+
+    cols = ["ci", "cj", "role", "_id", "tids", "tfs", "_m"]
+    a_side = tiles.join(docvec, docvec["chunk_id"] == tiles["ci"]).withColumn(
+        "role", F.lit("a")
+    )
+    b_side = (
+        tiles.filter(F.col("ci") != F.col("cj"))
+        .join(docvec, docvec["chunk_id"] == tiles["cj"])
+        .withColumn("role", F.lit("b"))
+    )
+    data = a_side.select(cols).unionByName(b_side.select(cols))
+
+    def _tile(pdf: pd.DataFrame) -> pd.DataFrame:
+        def flatten(part: pd.DataFrame):
+            nnz = np.fromiter((len(t) for t in part["tids"]), dtype=np.int64)
+            rows = np.repeat(np.arange(len(part)), nnz)
+            tids = np.concatenate([np.asarray(t) for t in part["tids"]])
+            tfs = np.concatenate([np.asarray(t) for t in part["tfs"]])
+            return rows, tids.astype(np.int64), tfs.astype(np.float64)
+
+        diag = bool((pdf["ci"] == pdf["cj"]).iloc[0])
+        a = pdf[pdf["role"] == "a"]
+        b = a if diag else pdf[pdf["role"] == "b"]
+        if not len(a) or not len(b):
+            return pd.DataFrame(columns=["id_a", "id_b", "_ma", "_mb", "_dot"])
+        ra_, ta_, fa_ = flatten(a)
+        rb_, tb_, fb_ = (ra_, ta_, fa_) if diag else flatten(b)
+        # Densify over the tile's OWN vocabulary: a block-pure tile
+        # touches only its block's terms (10x smaller at sf1).
+        local, inv = np.unique(np.concatenate([ta_, tb_]), return_inverse=True)
+        ida, na = a["_id"].to_numpy(), a["_m"].to_numpy()
+        idb, nb = b["_id"].to_numpy(), b["_m"].to_numpy()
+        # float32 GEMM is exact when Cauchy-Schwarz bounds every
+        # integer dot below 2^24; float64 is exact below 2^53.
+        exact32 = float(na.max()) * float(nb.max()) < 2**24
+        dt = np.float32 if exact32 else np.float64
+        A = np.zeros((len(a), len(local)), dtype=dt)
+        A[ra_, inv[: len(ta_)]] = fa_
+        B = A
+        if not diag:
+            B = np.zeros((len(b), len(local)), dtype=dt)
+            B[rb_, inv[len(ta_):]] = fb_
+        D = (A @ B.T).astype(np.float64)
+        mask = D / np.outer(na, nb) >= tt
+        if diag:
+            mask &= ida[:, None] < idb[None, :]
+        # chunks are doc_id-contiguous and tiles have ci <= cj, so the
+        # a-side id is always the smaller one
+        ri, rj = np.where(mask)
+        return pd.DataFrame(
+            {"id_a": ida[ri], "id_b": idb[rj], "_ma": na[ri], "_mb": nb[rj],
+             "_dot": D[ri, rj]}
+        )
+
+    dot = data.groupBy("ci", "cj").applyInPandas(
+        _tile,
+        schema="id_a long, id_b long, _ma double, _mb double, _dot double",
+    )
+    return _score(dot, measure, threshold)
+
+
+def _probe(docs, measure, n, id_col, text_col) -> dict:
+    """One bounded job over the PROBE_DOCS lowest-id docs, on the
+    measure's own tokens: vocabulary, posting density (the nonzero
+    fraction of the doc x token matrix) and the hottest token's doc
+    share. The sample is an id-CONTIGUOUS range (TakeOrderedAndProject,
+    no global sort), not an arbitrary LIMIT: density is a neighborhood
+    property, and a partition sample of a multi-source corpus mixes
+    disjoint vocabularies (measured on the sf1 fixture: 10 dense
+    blocks probe at 0.075 under LIMIT, 0.37 id-contiguous)."""
+    sample = docs.select(
+        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
+    )
+    tok = MEASURES[measure].tokens(
+        sample.orderBy("_id").limit(PROBE_DOCS), n
+    )
+    per_tok = tok.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    r = (
+        per_tok.agg(
+            F.count(F.lit(1)).alias("vocab"),
+            F.sum("_df").alias("postings"),
+            F.max("_df").alias("max_df"),
+        )
+        .crossJoin(tok.agg(F.countDistinct("_id").alias("docs")))
+        .first()
+    )
+    docs_n, vocab = r["docs"], r["vocab"]
+    if not docs_n:
+        return {"vocab": 0, "density": 0.0, "hot_share": 0.0}
+    return {
+        "vocab": vocab,
+        "density": r["postings"] / (vocab * docs_n),
+        "hot_share": r["max_df"] / docs_n,
+    }
+
+
+def setsim_pairs(
+    docs: DataFrame,
+    measure: str,
+    threshold: float,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    block_col: str | None = None,
+) -> DataFrame:
+    """OP-LLM-02 exact pair similarity: rows (id_a, id_b, <measure>)
+    with id_a < id_b and round(score, 6) >= threshold, for ``measure``
+    in MEASURES — ``jaccard`` and ``containment`` over distinct word
+    ``n``-gram shingles, ``cosine`` over term frequencies.
+    ``block_col`` restricts pairs to equal blocking keys (an LSH band
+    or source partition — at 100 TB the unblocked index fans out
+    quadratically on hot tokens).
+
+    The route is chosen from the data alone; every route emits the
+    identical rows, so a misroute costs time, never results:
+
+    1. a bounded ``limit(GATE_MIN_DOCS).count()`` — below it, inverted
+       (at that size the inverted join finishes in seconds at any
+       shape, and a probe would dominate);
+    2. otherwise one probe over the PROBE_DOCS lowest-id docs: cosine
+       with vocab <= DENSE_MAX_VOCAB and density >= DENSE_MIN_DENSITY
+       goes dense (the dense bench corpus probes at 0.97 / 31 terms);
+       if the full vocabulary then exceeds the densify bound, the gate
+       falls through to the sparse rule;
+    3. the hottest token in >= PREFIX_MIN_HOT_SHARE of the sample ->
+       prefix (hot-header and Zipf fixtures probe at 1.0; sf0.1
+       documents trigrams at 0.005, where inverted wins 3.1 vs 7.4 s
+       warm; the crossover in between is unmeasured); else inverted.
     """
-    strategy = _resolve_pair_strategy(
-        docs, JACCARD_STRATEGY_CONF, strategy, size_hint, size_gate
-    )
-    fn = (
-        ngram_jaccard_pairs
-        if strategy == "inverted"
-        else ngram_jaccard_pairs_prefix
-    )
-    return fn(docs, threshold, n, id_col, text_col, block_col)
+    m = MEASURES[measure]
+    args = (docs, measure, threshold, n, id_col, text_col, block_col)
+    if docs.select(id_col).limit(GATE_MIN_DOCS).count() < GATE_MIN_DOCS:
+        return setsim_inverted(*args)
+    s = _probe(docs, measure, n, id_col, text_col)
+    dense = s["vocab"] <= DENSE_MAX_VOCAB and s["density"] >= DENSE_MIN_DENSITY
+    if m.dense and block_col is None and dense:
+        try:
+            return setsim_dense(*args)
+        except ValueError:
+            pass  # the sample was dense but the full vocabulary is not
+    if s["hot_share"] >= PREFIX_MIN_HOT_SHARE:
+        return setsim_prefix(*args)
+    return setsim_inverted(*args)
 
 
 def minhash_signatures(
@@ -749,612 +1019,6 @@ def duplicate_ngram_spans(
     )
 
 
-def _tf_table(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """(doc, term, tf) postings with empty tokens dropped, persisted
-    (both the pair join and the norm pass consume it — see module
-    docstring for the release contract)."""
-    from pyspark.storagelevel import StorageLevel
-
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
-    return (
-        tok.filter(F.col("term") != "")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
-def _tf_cosine_finish(
-    dot: DataFrame, tf: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail for BOTH tf-cosine strategies: join per-doc norms
-    onto the integer (id_a, id_b, dot) table, round, filter. ONE
-    definition so the cross-strategy bit-parity the shared driver
-    oracle depends on is structural, not copy-paste. The norm table
-    is per-DOC (it scales with the corpus), so there is no static
-    broadcast hint — AQE picks broadcast-hash only while the side is
-    actually small (design rule: never force a broadcast on a side
-    that scales with the data)."""
-    nrm = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("nrm")
-    )
-    na = nrm.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("_na"))
-    nb = nrm.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("_nb"))
-    return (
-        dot.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "cosine", F.round(F.col("dot") / (F.col("_na") * F.col("_nb")), 6)
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def _tf_cosine_verify(
-    cand: DataFrame, tf: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact cosine for candidate (id_a, id_b) pairs: integer tf dot
-    over shared terms, then the shared :func:`_tf_cosine_finish`
-    tail — both strategies emit bit-identical rows by construction."""
-    ta = tf.select(
-        F.col("doc_id").alias("id_a"), "term", F.col("tf").alias("_tfa")
-    )
-    tb = tf.select(
-        F.col("doc_id").alias("id_b"), "term", F.col("tf").alias("_tfb")
-    )
-    dot = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "term"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("_tfa") * F.col("_tfb")).alias("dot"))
-    )
-    return _tf_cosine_finish(dot, tf, threshold)
-
-
-def tf_cosine_pairs(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """OP-LLM-02 (TF cosine, inverted-index form): doc-doc cosine
-    over sparse term-frequency vectors — the embedding-free IR
-    similarity. The dot product only materializes for pairs SHARING a
-    term (inverted-index self-join on the tf postings); the per-doc
-    norm table (corpus-sized — one row per doc) joins back without a
-    static broadcast hint, AQE decides. Integer tf products keep the
-    dot exact, so only the final ratio needs rounding.
-
-    Cost is sum over terms of df(term)^2 — on a small-vocabulary or
-    boilerplate-heavy corpus every posting is hot and the join fans
-    out quadratically (observed: GC death at 5k docs x 31-term vocab
-    on a default-heap session). :func:`tf_cosine_pairs_prefix` is the
-    lossless scale form; :func:`tf_cosine_pairs_auto` gates them."""
-    tf = _tf_table(docs, id_col, text_col)
-    a, b = tf.alias("a"), tf.alias("b")
-    dot = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.sum(F.col("a.tf") * F.col("b.tf")).alias("dot"))
-    )
-    return _tf_cosine_finish(dot, tf, threshold)
-
-
-def tf_cosine_pairs_prefix(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """OP-LLM-02 (TF cosine, L2-prefix-filtered) — the EXACT same
-    pair set as :func:`tf_cosine_pairs`, computed with the AllPairs
-    L2 prefix filter (Bayardo/Ma/Srikant, WWW'07 — cosine is the
-    paper's original domain) instead of a full inverted-index
-    self-join.
-
-    Theorem: unit-normalize each tf vector and fix ONE global term
-    order (ascending document frequency here — rarest first, so hot
-    postings land in the suffix and never enter the index). For a doc
-    a, let s_a(i) = sqrt(sum of squared weights from position i on),
-    and let a's prefix = {positions i with s_a(i) >= t}. Take the
-    FIRST shared term w of a qualifying pair in the global order:
-    every shared term sits at or after w in both docs' suffix sets,
-    so by Cauchy-Schwarz cos(a,b) <= s_a(w) * s_b(w). If w were
-    outside a's prefix then s_a(w) < t and (since s_b <= 1)
-    cos < t — contradiction; symmetrically for b. Hence the first
-    shared term of every qualifying pair lies in BOTH prefixes, and
-    the prefix x prefix self-join has recall 1.0 (the one-sided
-    prefix x full-postings probe is also lossless but its candidate
-    volume carries each term's FULL posting list — measured 486 s ->
-    285 s at sf1 on the dense-block boundary corpus, identical 17,770
-    pairs; BASELINE.md "two-sided prefix A/B"). The admission
-    band of round(cos, 6) >= t is cos >= t - 5e-7, so the prefix
-    keeps positions with suffix_sq >= (t - 1e-6)^2 - 1e-9 (the
-    squared slack also covers float accumulation in the window sum;
-    s_a(w), s_b(w) >= cos >= t - 5e-7 > t - 1e-6 keeps w inside both
-    slackened prefixes).
-
-    Identical-pair parity vs the inverted form is pinned in
-    tests/test_llm_ops.py::test_prefix_tf_cosine_identical_pairs
-    (sf0.001 corpus + a hot-vocabulary fixture); the same oracle SQL
-    drives both registered queries.
-
-    Scale posture: candidate volume is sum over terms of
-    |prefix postings| * |full postings| — at threshold 0.9 a prefix
-    only holds the rarest ~19% of each vector's squared mass, so on
-    Zipf-vocabulary text the hot terms contribute nothing to the
-    index side and candidates stay near-linear. Measured A/B
-    (BASELINE.md "prefix vs inverted TF-cosine"): on an 8k-doc corpus
-    with 10 boilerplate tokens shared by every doc + 20 unique rare
-    tokens each, prefix 3.8 s vs inverted 82 s warm (20x), identical
-    200-pair output. HONEST BOUNDARY: a corpus whose documents all
-    share one tiny vocabulary (the synthetic bench corpus: 31 terms)
-    is effectively DENSE rank-31 — nearly every doc pair shares
-    prefix terms, candidates stay ~quadratic for ANY lossless sparse
-    filter (~5x below the inverted join's fan-out in rows, yet warm
-    wall-clock LOSES: 87 s vs 14 s at 5k docs, because the window +
-    distinct + verify overhead isn't repaid), and executors need
-    memory sized for the pair partial-agg maps either way. For that
-    regime the right tool is the sign-LSH blocked embedding path
-    (embedding_neardup_pairs with hyperplane buckets), not exact
-    sparse cosine — which is why the auto gate keeps "inverted" as
-    its default and the conf/hint flips call sites at 100 TB."""
-    tt = threshold - 1.0e-6
-    tf = _tf_table(docs, id_col, text_col)
-    nrm = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("_nrm")
-    )
-    freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    weighted = (
-        tf.join(nrm, "doc_id")
-        .join(freq, "term")
-        .withColumn("_w2", (F.col("tf") / F.col("_nrm")) ** 2)
-    )
-    wsuf = (
-        Window.partitionBy("doc_id")
-        .orderBy("_df", "term")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    prefix = (
-        weighted.withColumn("_suf_sq", F.sum("_w2").over(wsuf))
-        .filter(F.col("_suf_sq") >= F.lit(tt * tt - 1.0e-9))
-        .select("doc_id", "term", "_suf_sq")
-    )
-    # Two-sided prefix x prefix self-join (first-shared-term bound
-    # above): ordered pair direction comes free from doc_id <, and
-    # hot full-posting lists never enter either side. The extra
-    # suffix-product predicate is the PPJoin-style positional bound:
-    # cos <= s_a(w) * s_b(w) at the FIRST shared term w, and a
-    # qualifying pair is always (re)generated via that w — where the
-    # product must clear tt — so dropping edges whose product falls
-    # short prunes only candidate DUPLICATES, never a pair's sole
-    # surviving edge (slack mirrors the prefix filter's).
-    p, f = prefix.alias("p"), prefix.alias("f")
-    cand = (
-        p.join(
-            f,
-            (F.col("p.term") == F.col("f.term"))
-            & (F.col("p.doc_id") < F.col("f.doc_id"))
-            & (
-                F.col("p._suf_sq") * F.col("f._suf_sq")
-                >= F.lit(tt * tt * tt * tt - 1.0e-9)
-            ),
-        )
-        .select(
-            F.col("p.doc_id").alias("id_a"),
-            F.col("f.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    return _tf_cosine_verify(cand, tf, threshold)
-
-
-def tf_cosine_pairs_dense(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_size: int = 2048,
-    max_vocab: int = 4096,
-) -> DataFrame:
-    """OP-LLM-02 (TF cosine, dense block-GEMM) — the EXACT same pair
-    set as :func:`tf_cosine_pairs`, computed as a tiled dense matrix
-    product for the DENSE-corpus regime where every sparse filter
-    degenerates (BASELINE.md dense-corpus note: a tiny shared
-    vocabulary makes candidates ~quadratic for ANY lossless sparse
-    filter — prefix included).
-
-    Why not the sign-LSH route the round-6 advice suggested: measured
-    on the real dense bench corpus (5k docs, 31-term vocab, all-
-    positive tf vectors), hyperplane LSH needs ~25% of ALL pairs as
-    candidates to reach 95% recall (p=12/t=16; p=16/t=16 gives 10.8%
-    for only 86%) — the bulk of the corpus sits at cosine ~0.62 and
-    the collision S-curve between 0.62 and 0.9 is too flat on the
-    positive orthant. A lossless tiled GEMM does the SAME quadratic
-    pair count at BLAS constants instead of SQL-join constants and
-    keeps recall exactly 1.0, so the dense route stays value-oracled
-    (the shared _TF_COSINE_ORACLE drives it like every other
-    strategy).
-
-    Plan shape:
-
-    1. postings -> bounded vocab index (``max_vocab`` guards the
-       densify memory; exceeding it raises — that corpus is sparse
-       and belongs to the prefix route);
-    2. per-doc sparse vector rows (tid/tf arrays + Spark-computed
-       norm), chunked into contiguous doc_id ranges via the
-       distributed :func:`~...operators.sorts.global_rank` (never an
-       empty-partition window);
-    3. IVF-style EXACT tile pruning by two intersected bounds: the
-       spherical triangle inequality (a chunk pair survives only if
-       cos(theta_ij - r_i - r_j) >= threshold, lossless because
-       angle(a,b) >= angle(c_i,c_j) - r_i - r_j for a in chunk i, b
-       in chunk j) AND the nonnegativity bound
-       cos(a,b) <= sum_t maxw_it*maxw_jt, which prunes
-       vocabulary-disjoint tiles wide radii let through. Chunk stats
-       are chunk-dim x vocab-dim — a driver-sized table (k x V);
-    4. surviving tiles -> ``applyInPandas`` computing the integer tf
-       dot as a float64 GEMM (exact below 2^53) with a slack
-       prefilter ``dot/(|a||b|) >= t - 1e-6``;
-    5. the canonical :func:`_tf_cosine_finish` joins the SPARK-side
-       norms, rounds and filters — so admission rounding is
-       bit-identical to the other strategies by construction (the
-       UDF only ever emits a slack superset plus the exact integer
-       dot).
-
-    Scale posture: exact dense similarity is O(n^2 V) WORK no matter
-    the engine; this form moves it from a shuffle-heavy SQL join to
-    embarrassingly-parallel vectorized tiles (no shuffle after the
-    chunk assignment, tile fan-out = data duplication bounded by
-    surviving-tile count) and prunes tiles whose geometry cannot
-    reach the threshold (measured sf1 numbers: BASELINE.md
-    §Round-7 — cross-block tiles all pruned by the nonnegativity
-    bound because doc_id-contiguous chunks stay block-pure). For
-    corpora where k = n/chunk_size makes
-    the k x k driver tile matrix unwieldy (>~10^4 chunks), raise
-    ``chunk_size`` toward the task-memory bound (chunk x V doubles);
-    past that, dense exact pairs at 100 TB are the wrong ask — the
-    quadratic is intrinsic, and the honest tools are the approximate
-    family (embedding LSH/IVF with published recall).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from gexp_ml_dask_spark.operators.sorts import global_rank
-
-    spark = docs.sparkSession
-    tf = _tf_table(docs, id_col, text_col)
-    # Distributed size gate FIRST (nothing dim-sized touches the
-    # driver until the max_vocab contract holds), then the bounded
-    # vocab is sorted driver-side and re-broadcast as a literal dim —
-    # not a partitionless row_number window (single-task sort +
-    # single-partition WARN). tf is persisted by _tf_table, so the
-    # second action re-reads the cached term table, not the corpus.
-    v_size = tf.select("term").distinct().count()
-    if v_size > max_vocab:
-        tf.unpersist()
-        raise ValueError(
-            f"tf_cosine_pairs_dense: vocabulary {v_size} exceeds "
-            f"max_vocab={max_vocab}; this corpus is sparse — use the "
-            "prefix or inverted strategy"
-        )
-    terms = sorted(
-        (r[0] for r in tf.select("term").distinct().collect()),
-        key=lambda v: (v is not None, v),
-    )
-    vocab = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(terms)], "term string, tid int"
-    )
-    tfj = tf.join(F.broadcast(vocab), "term")
-    docvec = (
-        tfj.groupBy("doc_id")
-        .agg(
-            F.collect_list(F.struct("tid", "tf")).alias("_p"),
-            F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("_nrm"),
-        )
-        .select(
-            "doc_id",
-            F.col("_p.tid").alias("tids"),
-            F.col("_p.tf").alias("tfs"),
-            "_nrm",
-        )
-    )
-    ranked = global_rank(docvec, "doc_id", "doc_id", out_col="_rank")
-    docvec = ranked.withColumn(
-        "chunk_id", F.floor((F.col("_rank") - 1) / chunk_size).cast("int")
-    ).drop("_rank")
-    docvec = docvec.persist()
-
-    # Chunk geometry for the exact tile bound: unit-weight centroid
-    # sums per (chunk, tid), plus each chunk's min cosine to its own
-    # centroid (= max angular radius). Both are chunk x vocab /
-    # chunk-dim tables — driver-sized by the max_vocab guard.
-    unit = (
-        tfj.join(docvec.select("doc_id", "_nrm", "chunk_id"), "doc_id")
-        .select(
-            "doc_id",
-            "chunk_id",
-            "tid",
-            (F.col("tf") / F.col("_nrm")).alias("_w"),
-        )
-        # two collect jobs consume this (chunk sums, then min-cosines
-        # against the centroids derived from the first) — persist so
-        # the tfj join + weight projection runs once
-        .persist()
-    )
-    csum = (
-        unit.groupBy("chunk_id", "tid")
-        .agg(F.sum("_w").alias("_s"), F.max("_w").alias("_mx"))
-    )
-    cpdf = csum.toPandas()
-    k = int(cpdf["chunk_id"].max()) + 1 if len(cpdf) else 0
-    C = np.zeros((k, v_size))
-    C[cpdf["chunk_id"].to_numpy(), cpdf["tid"].to_numpy()] = cpdf[
-        "_s"
-    ].to_numpy()
-    Mx = np.zeros((k, v_size))
-    Mx[cpdf["chunk_id"].to_numpy(), cpdf["tid"].to_numpy()] = cpdf[
-        "_mx"
-    ].to_numpy()
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0] = 1.0
-    Cu = C / cn[:, None]
-    # per-doc cosine to its chunk centroid -> per-chunk min
-    cen = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "chunk_id": cpdf["chunk_id"],
-                "tid": cpdf["tid"],
-                "_c": (cpdf["_s"] / cn[cpdf["chunk_id"].to_numpy()]),
-            }
-        )
-    )
-    mincos = (
-        unit.join(cen, ["chunk_id", "tid"])
-        .groupBy("doc_id", "chunk_id")
-        .agg(F.sum(F.col("_w") * F.col("_c")).alias("_cos"))
-        .groupBy("chunk_id")
-        .agg(F.min("_cos").alias("_min_cos"))
-        .toPandas()
-    )
-    unit.unpersist()
-    radius = np.zeros(k)
-    mc = np.clip(mincos["_min_cos"].to_numpy(), -1.0, 1.0)
-    radius[mincos["chunk_id"].to_numpy()] = np.arccos(mc)
-
-    # Lossless tile admission, two exact bounds intersected:
-    # (1) spherical triangle inequality — best possible pair angle
-    #     between chunks i,j is max(0, theta_ij - r_i - r_j);
-    # (2) nonnegativity bound — tf weights are >= 0, so
-    #     cos(a,b) = sum_t w_at*w_bt <= sum_t maxw_it*maxw_jt; this
-    #     is what kills vocabulary-disjoint tiles (shared terms = 0
-    #     => bound = 0) that wide chunk radii let through (1).
-    theta = np.arccos(np.clip(Cu @ Cu.T, -1.0, 1.0))
-    best = np.cos(np.maximum(0.0, theta - radius[:, None] - radius[None, :]))
-    best = np.minimum(best, Mx @ Mx.T)
-    tt = threshold - 1.0e-6
-    ii, jj = np.where(np.triu(best >= tt))
-    tiles = [(int(a), int(b)) for a, b in zip(ii, jj)]
-    tiles_df = spark.createDataFrame(
-        pd.DataFrame(tiles, columns=["ci", "cj"]).astype("int32")
-    )
-
-    a_side = tiles_df.join(
-        docvec, docvec["chunk_id"] == tiles_df["ci"]
-    ).select("ci", "cj", F.lit("a").alias("role"), "doc_id", "tids", "tfs", "_nrm")
-    b_side = (
-        tiles_df.filter(F.col("ci") != F.col("cj"))
-        .join(docvec, docvec["chunk_id"] == tiles_df["cj"])
-        .select("ci", "cj", F.lit("b").alias("role"), "doc_id", "tids", "tfs", "_nrm")
-    )
-    data = a_side.unionByName(b_side)
-    V = v_size
-
-    def _tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        def flatten(part: pd.DataFrame):
-            nnz = np.fromiter(
-                (len(t) for t in part["tids"]), dtype=np.int64
-            )
-            rows = np.repeat(np.arange(len(part)), nnz)
-            tids = (
-                np.concatenate([np.asarray(t) for t in part["tids"]])
-                if len(part)
-                else np.empty(0, dtype=np.int64)
-            ).astype(np.int64)
-            tfs = (
-                np.concatenate([np.asarray(t) for t in part["tfs"]])
-                if len(part)
-                else np.empty(0, dtype=np.int64)
-            ).astype(np.float64)
-            return rows, tids, tfs
-
-        diag = bool((pdf["ci"] == pdf["cj"]).iloc[0])
-        a = pdf[pdf["role"] == "a"]
-        b = a if diag else pdf[pdf["role"] == "b"]
-        ra_, ta_, fa_ = flatten(a)
-        rb_, tb_, fb_ = (ra_, ta_, fa_) if diag else flatten(b)
-        if not len(a) or not len(b):
-            return pd.DataFrame({"id_a": [], "id_b": [], "dot": []})
-        # Densify over the tile's OWN vocabulary, not the global one:
-        # a block-pure tile touches only its block's terms, so the
-        # GEMM inner dimension shrinks from V to |terms in tile|
-        # (10x at sf1: 31 of 310).
-        local, inv = np.unique(np.concatenate([ta_, tb_]), return_inverse=True)
-        la, lb = inv[: len(ta_)], inv[len(ta_):]
-        ida, na = a["doc_id"].to_numpy(), a["_nrm"].to_numpy()
-        idb, nb = b["doc_id"].to_numpy(), b["_nrm"].to_numpy()
-        # float32 GEMM when Cauchy-Schwarz bounds every integer dot
-        # below 2^24 (all intermediates are integers, so the sgemm is
-        # exact there); float64 otherwise — exact below 2^53.
-        dt = (
-            np.float32
-            if float(na.max()) * float(nb.max()) < 2**24
-            else np.float64
-        )
-        A = np.zeros((len(a), len(local)), dtype=dt)
-        A[ra_, la] = fa_
-        if diag:
-            B = A
-        else:
-            B = np.zeros((len(b), len(local)), dtype=dt)
-            B[rb_, lb] = fb_
-        D = (A @ B.T).astype(np.float64)
-        mask = D / np.outer(na, nb) >= tt
-        if diag:
-            mask &= ida[:, None] < idb[None, :]
-        ri, rj = np.where(mask)
-        lo = np.minimum(ida[ri], idb[rj])
-        hi = np.maximum(ida[ri], idb[rj])
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "dot": D[ri, rj]})
-
-    dot = data.groupBy("ci", "cj").applyInPandas(
-        _tile, schema="id_a long, id_b long, dot double"
-    )
-    return _tf_cosine_finish(dot, tf, threshold)
-
-
-def tf_density_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    probe_docs: int = 10_000,
-) -> dict:
-    """Vocabulary-density probe for the dense-route gate: over the
-    ``probe_docs`` smallest-id documents, measure n_docs, vocab size
-    and the posting fill fraction ``density = postings / (vocab *
-    n_docs)`` — the fraction of the doc x term matrix that is
-    nonzero. One bounded job: the ordered take compiles to
-    TakeOrderedAndProject (per-partition heaps, no global sort), so
-    the probe costs one scan at any corpus scale.
-
-    The sample is a CONTIGUOUS id range, not an arbitrary LIMIT:
-    density is a NEIGHBORHOOD property, and an arbitrary partition
-    sample of a multi-source corpus mixes disjoint vocabularies,
-    diluting the stat by the source count (measured on the sf1
-    fixture: 10 vocabulary-disjoint dense blocks probe at 0.075
-    under LIMIT but 0.37 under an id-contiguous sample — the former
-    misroutes a corpus whose every block is dense at 0.75). Id
-    contiguity is the same locality proxy the dense route's chunking
-    uses. Zipf text probes at ~1e-3 or less either way; a misrouted
-    gate is a performance miss, never a correctness one (every
-    strategy emits identical rows)."""
-    tok = (
-        docs.select(id_col, text_col)
-        .orderBy(id_col)
-        .limit(probe_docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    row = tok.agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.countDistinct("term").alias("vocab"),
-        F.countDistinct("doc_id", "term").alias("postings"),
-    ).collect()[0]
-    n, v, p = row["n_docs"], row["vocab"], row["postings"]
-    return {
-        "n_docs": n,
-        "vocab": v,
-        "postings": p,
-        "density": (p / (v * n)) if n and v else 0.0,
-    }
-
-
-TF_COSINE_STRATEGY_CONF = "spark.gexp_ml.tf_cosine.strategy"
-
-
-def tf_cosine_pairs_auto(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    strategy: str | None = None,
-    size_hint: int | None = None,
-    size_gate: int = 1_000_000,
-    probe: bool = False,
-    probe_docs: int = 10_000,
-    probe_min_docs: int = 20_000,
-    dense_max_vocab: int = 4096,
-    dense_min_density: float = 0.2,
-) -> DataFrame:
-    """OP-LLM-02 — strategy-gated exact TF-cosine pairs; same
-    contract shape as :func:`ngram_jaccard_pairs_auto`, extended with
-    the DENSE route (VERDICT r6 item 4). ALL physical forms emit the
-    IDENTICAL rows (pinned in tests/test_llm_ops.py::
-    test_prefix_tf_cosine_identical_pairs and
-    test_dense_tf_cosine_identical_pairs), so the gate can flip
-    without changing results.
-
-    Resolution order: explicit ``strategy`` ("inverted" | "prefix" |
-    "dense"), the session conf ``spark.gexp_ml.tf_cosine.strategy``,
-    the vocabulary-density probe (``probe=True`` only: ONE bounded
-    stats job over <= 100k docs — :func:`tf_density_stats` — routes
-    to "dense" when vocab <= ``dense_max_vocab`` AND posting density
-    >= ``dense_min_density``; measured endpoints: the dense bench
-    corpus probes at density 0.97/vocab 31 where dense wins 285 s ->
-    <60 s at sf1, the Zipf hot-vocab A/B fixture probes at density
-    ~1e-3 where prefix wins 82 s -> 3.8 s), then ``size_hint`` vs
-    ``size_gate``, default "inverted" (right for oracle/bench
-    scale). Without ``probe`` the gate stays fully lazy — no job at
-    plan-build time."""
-    if strategy is None:
-        conf = docs.sparkSession.conf.get(TF_COSINE_STRATEGY_CONF, "auto")
-        if conf != "auto":
-            strategy = conf
-    probed_dense = False
-    if strategy is None and probe:
-        # Small-corpus cheap-out (VERDICT r7 item 3): a BOUNDED
-        # limit(probe_min_docs).count() (ids only — column-pruned,
-        # stops at the limit) gates the much dearer tokenize-and-
-        # countDistinct density probe. Under probe_min_docs docs the
-        # inverted index finishes in seconds regardless of density,
-        # and the probe itself was the dominant cost at oracle scale
-        # (27 s vs the inverted twin's 9 s, judge sweep r7) — small
-        # corpora route straight to the sparse resolution.
-        if docs.select(id_col).limit(probe_min_docs).count() < probe_min_docs:
-            probe = False
-    if strategy is None and probe:
-        stats = tf_density_stats(docs, id_col, text_col, probe_docs)
-        if (
-            stats["vocab"] <= dense_max_vocab
-            and stats["density"] >= dense_min_density
-        ):
-            strategy, probed_dense = "dense", True
-    if strategy == "dense":
-        try:
-            return tf_cosine_pairs_dense(
-                docs, threshold, id_col, text_col, max_vocab=dense_max_vocab
-            )
-        except ValueError:
-            if not probed_dense:  # explicitly requested dense: surface it
-                raise
-            # The probe samples a contiguous id range; a heterogeneous
-            # corpus can probe dense yet carry a global vocabulary past
-            # the densify bound (the dense route checks the FULL vocab
-            # and refuses). Fall back to the sparse resolution so a
-            # misrouted gate stays a performance miss, never a crash.
-            strategy = None
-    strategy = _resolve_pair_strategy(
-        docs, TF_COSINE_STRATEGY_CONF, strategy, size_hint, size_gate
-    )
-    fn = tf_cosine_pairs if strategy == "inverted" else tf_cosine_pairs_prefix
-    return fn(docs, threshold, id_col, text_col)
-
-
 def remove_duplicate_spans(
     docs: DataFrame,
     n: int = 5,
@@ -1527,7 +1191,13 @@ def contamination_hits(
     join (every returned row has a positive count by construction).
     Same plan shape: eval reduces to distinct grams (broadcast by
     default), training pays one scan + explode + probe + per-doc
-    agg."""
+    agg.
+
+    Precondition: doc ids are UNIQUE. The result has one row per
+    contaminated id, its count summed over every document carrying
+    that id, so it equals ``decontaminate(...).filter(is_contaminated)``
+    only when ids are unique (decontaminate emits one row per input
+    document)."""
     def doc_grams(df: DataFrame, keep_pos: bool) -> DataFrame:
         toks = F.split(F.col(text_col), " ")
         base = df.select(
@@ -1684,166 +1354,3 @@ def embedding_neardup_pairs(
         F.round(cosine, 6).alias("cosine"),
     )
     return pairs.filter(F.col("cosine") >= threshold)
-
-
-def containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """OP-LLM-02 (containment / overlap coefficient) — pairs with
-    |A∩B| / min(|A|,|B|) >= threshold over distinct shingle sets.
-    Flags near-SUBSET duplicates (quote inclusion, boilerplate
-    wrapping) that symmetric Jaccard under-scores: a 100-shingle doc
-    fully contained in a 1000-shingle doc has Jaccard 0.1 but
-    containment 1.0. Identical inverted-index pair machinery to
-    :func:`ngram_jaccard_pairs`; only the final ratio differs.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    shingled = docs.select(F.col(id_col), shingles(text_col, n).alias("_shs"))
-    exploded = shingled.select(
-        F.col(id_col),
-        F.size("_shs").alias("_nsh"),
-        F.explode("_shs").alias("_sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    left, right = exploded.alias("a"), exploded.alias("b")
-    inter = (
-        left.join(
-            right,
-            (F.col("a._sh") == F.col("b._sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a._nsh").alias("_na"),
-            F.col("b._nsh").alias("_nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("_ni"))
-    )
-    cont = F.col("_ni") / F.least(F.col("_na"), F.col("_nb"))
-    return (
-        inter.withColumn("containment", F.round(cont, 6))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    )
-
-
-def containment_pairs_prefix(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """OP-LLM-02 (containment, prefix-filtered) — the EXACT same pair
-    set as :func:`containment_pairs`, with AllPairs-style lossless
-    candidate pruning adapted to the overlap coefficient.
-
-    Theorem (one-sided, size-oriented): a qualifying pair needs
-    |A∩B| >= t*min(|A|,|B|). Let S be the smaller set; under any
-    fixed global shingle order, if S shares nothing within its first
-    |S| - floor(t'*|S|) + 1 shingles (t' the round-6-slackened
-    threshold), the overlap is at most floor(t'*|S|) - 1 < t'*|S| —
-    contradiction. So the candidate index holds each doc's own-size
-    prefix (rarest shingles first — hot shingles never enter), probed
-    by FULL postings of docs at least as large; candidates are then
-    verified exactly with one array_intersect per pair. Identical
-    pair parity vs the inverted form is pinned in
-    tests/test_llm_ops.py::test_prefix_containment_identical_pairs.
-
-    Same scale posture (and the same dense-corpus boundary) as
-    :func:`tf_cosine_pairs_prefix` / :func:`ngram_jaccard_pairs_prefix`.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    eps = 1.0e-6
-    shingled = docs.select(
-        F.col(id_col), shingles(text_col, n).alias("_shs")
-    ).withColumn("_nsh", F.size("_shs"))
-    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-
-    ex = shingled.select(id_col, "_nsh", F.explode("_shs").alias("_sh"))
-    freq = ex.groupBy("_sh").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "_sh")
-    prefix = (
-        ex.join(freq, "_sh")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(
-            F.col("_rn")
-            <= F.col("_nsh")
-            - F.floor((F.lit(threshold) - F.lit(eps)) * F.col("_nsh"))
-            + 1
-        )
-        .select(id_col, "_nsh", "_sh")
-    )
-    p, f = prefix.alias("p"), ex.alias("f")
-    cand = (
-        p.join(
-            f,
-            (F.col("p._sh") == F.col("f._sh"))
-            & (F.col(f"p.{id_col}") != F.col(f"f.{id_col}"))
-            # the theorem speaks about the SMALLER doc's prefix
-            & (F.col("p._nsh") <= F.col("f._nsh")),
-        )
-        .select(
-            F.least(
-                F.col(f"p.{id_col}"), F.col(f"f.{id_col}")
-            ).alias("id_a"),
-            F.greatest(
-                F.col(f"p.{id_col}"), F.col(f"f.{id_col}")
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = shingled.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_shs").alias("_shs_a"),
-        F.col("_nsh").alias("_na"),
-    )
-    sb = shingled.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_shs").alias("_shs_b"),
-        F.col("_nsh").alias("_nb"),
-    )
-    ni = F.size(F.array_intersect("_shs_a", "_shs_b"))
-    cont = ni / F.least(F.col("_na"), F.col("_nb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("containment", F.round(cont, 6))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    )
-
-
-CONTAINMENT_STRATEGY_CONF = "spark.gexp_ml.containment.strategy"
-
-
-def containment_pairs_auto(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    strategy: str | None = None,
-    size_hint: int | None = None,
-    size_gate: int = 1_000_000,
-) -> DataFrame:
-    """OP-LLM-02 — strategy-gated containment pairs; the same lazy
-    gate contract as :func:`ngram_jaccard_pairs_auto` /
-    :func:`tf_cosine_pairs_auto` (explicit ``strategy``, then conf
-    ``spark.gexp_ml.containment.strategy``, then ``size_hint`` vs
-    ``size_gate``, default "inverted")."""
-    strategy = _resolve_pair_strategy(
-        docs, CONTAINMENT_STRATEGY_CONF, strategy, size_hint, size_gate
-    )
-    fn = (
-        containment_pairs
-        if strategy == "inverted"
-        else containment_pairs_prefix
-    )
-    return fn(docs, threshold, n, id_col, text_col)

@@ -509,15 +509,27 @@ def kmeans_lloyd(
     # instead of three.
     dims = dims.repartition(id_col).persist(StorageLevel.MEMORY_AND_DISK)
 
+    def _plant(rows) -> DataFrame:
+        # The pivot key is the reserved "_d<cluster>", not the bare
+        # cluster number: pivot output columns "0".."k-1" would collide
+        # with an input id column named e.g. "0".
+        cent_df = spark.createDataFrame(
+            rows, "cluster long, pos int, c double"
+        )
+        return F.broadcast(
+            cent_df.withColumn(
+                "_dk", F.concat(F.lit("_d"), F.col("cluster").cast("string"))
+            )
+        )
+
     def _replant(cent_df: DataFrame) -> DataFrame:
         # k*dim rounded rows -> driver -> literal DataFrame: lineage
         # truncation, NOT computation (everything is pre-rounded)
-        rows = [
-            (int(r["cluster"]), int(r["pos"]), float(r["c"]))
-            for r in cent_df.collect()
-        ]
-        return F.broadcast(
-            spark.createDataFrame(rows, "cluster long, pos int, c double")
+        return _plant(
+            [
+                (int(r["cluster"]), int(r["pos"]), float(r["c"]))
+                for r in cent_df.collect()
+            ]
         )
 
     # Seed centroids: the k lowest-id vectors, numbered 0..k-1 in id
@@ -544,15 +556,12 @@ def kmeans_lloyd(
         {r["_sid"] for r in seed_rows}, key=lambda v: (v is not None, v)
     )
     cluster_of = {v: i for i, v in enumerate(sids)}
-    cent = F.broadcast(
-        spark.createDataFrame(
-            [
-                (cluster_of[r["_sid"]], pos, float(x))
-                for r in seed_rows
-                for pos, x in enumerate(r["_v"])
-            ],
-            "cluster long, pos int, c double",
-        )
+    cent = _plant(
+        [
+            (cluster_of[r["_sid"]], pos, float(x))
+            for r in seed_rows
+            for pos, x in enumerate(r["_v"])
+        ]
     )
 
     clusters = list(range(k))
@@ -567,7 +576,7 @@ def kmeans_lloyd(
         dist_wide = (
             dims.join(cent, "pos")
             .groupBy(id_col)
-            .pivot("cluster", clusters)
+            .pivot("_dk", [f"_d{j}" for j in clusters])
             .agg(F.round(F.sum(sq), 6))
         )
         best = F.array_min(
@@ -575,7 +584,7 @@ def kmeans_lloyd(
                 F.array(
                     *[
                         F.struct(
-                            F.col(str(j)).alias("dist"),
+                            F.col(f"_d{j}").alias("dist"),
                             F.lit(j).cast("long").alias("cluster"),
                         )
                         for j in clusters

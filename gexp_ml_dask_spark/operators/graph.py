@@ -62,8 +62,8 @@ def connected_components(
     distributed label-propagation + pointer-jump loop runs (set
     ``driver_threshold=0`` to force it); each round runs ONE action
     whose only work is materializing the round's checkpoint — the
-    convergence count rides along as an ``observe()`` metric over
-    the carried previous-label column (round 9: the count was
+    convergence count is that action's one aggregate row over the
+    carried previous-label column (round 9: the count was
     previously a separate join of the new labels against the old
     table, re-shuffling both node tables every round just to
     compare; only the neighbor-min step needs checking: at its
@@ -97,8 +97,6 @@ def connected_components(
         .select(F.col("u").alias("node"), F.col("u").alias("component"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-    from pyspark.sql import Observation
 
     for _ in range(max_iter):
         # Round part 1 — neighbor min: the edge list keyed by v picks
@@ -138,22 +136,19 @@ def connected_components(
         )
         # Truncate lineage: without this each round's plan embeds all
         # previous rounds and the optimizer cost explodes by ~2^r.
-        # Lazy checkpoint FIRST, observe() on the checkpointed frame:
-        # the count() below is then the round's ONLY action — it
-        # materializes the checkpoint, and the change count is an
-        # observed metric over the rows it materializes (a linear
-        # scan-time accumulator; the pre-round-9 form re-joined the
-        # new labels against the old node table, paying two extra
-        # node-sized exchanges per round just to count differences).
+        # Lazy checkpoint FIRST, then ONE aggregate action over the
+        # checkpointed frame: it materializes the checkpoint, and its
+        # single row is the changed-label count (a linear scan-time
+        # sum; the pre-round-9 form re-joined the new labels against
+        # the old node table, paying two extra node-sized exchanges
+        # per round just to count differences). Not observe(): an
+        # Observation leaves the session unserializable, and every
+        # later MLlib tree-model transform() in it then fails with
+        # "Task not serializable: ObservationManager".
         jumped = jumped.localCheckpoint(eager=False)
-        obs = Observation()
-        jumped.observe(
-            obs,
-            F.sum(
-                (F.col("component") != F.col("_prev")).cast("long")
-            ).alias("changed"),
-        ).count()
-        changed = obs.get["changed"] or 0
+        changed = jumped.agg(
+            F.sum((F.col("component") != F.col("_prev")).cast("long"))
+        ).first()[0] or 0
         comp.unpersist()
         comp = jumped.drop("_prev")
         if changed == 0:

@@ -3719,16 +3719,14 @@ _NGRAM_JACCARD_ORACLE = (
 
 @register("op_llm_02_ngram_jaccard", _NGRAM_JACCARD_ORACLE)
 def op_llm_02_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-LLM-02 (exact n-gram Jaccard): shingle inverted-index
-    self-join — only pairs sharing a shingle materialize. Routed
-    through the lazy strategy gate: the lossless prefix-filtered form
-    (AllPairs) takes over at 100 TB via conf/size-hint, identical
-    pair set either way."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    """OP-LLM-02 (exact n-gram Jaccard) through the setsim_pairs gate:
+    under GATE_MIN_DOCS (20k) documents — every driver fixture — the
+    shingle inverted-index self-join; above it, the one data probe
+    routes hot-token corpora to the lossless AllPairs prefix filter.
+    Identical pair set on every route."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
 
-    return ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    return setsim_pairs(load_docs(spark, sf_dir), "jaccard", 0.4, n=3)
 
 
 @register("op_llm_02_ngram_jaccard_prefix", _NGRAM_JACCARD_ORACLE)
@@ -3739,11 +3737,9 @@ def op_llm_02_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     path's exact output directly. Hot shingles never enter the
     candidate index (BASELINE.md hot-shingle A/B: 11.8 s vs the
     inverted join's 58 s on a boilerplate-header corpus)."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_prefix
 
-    return ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3, strategy="prefix"
-    )
+    return setsim_prefix(load_docs(spark, sf_dir), "jaccard", 0.4, n=3)
 
 
 # Containment (overlap coefficient): |A∩B| / min(|A|,|B|) — catches
@@ -3770,28 +3766,25 @@ def op_llm_02_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-02 (containment): overlap coefficient
     |A∩B| / min(|A|,|B|) over shingle sets — flags near-SUBSET
     duplicates (quoted or boilerplate-wrapped documents) that
-    symmetric Jaccard under-scores; routed through the lazy strategy
-    gate (inverted-index join at bench scale, size-oriented lossless
-    prefix filter via ``spark.gexp_ml.containment.strategy=prefix``
-    or a size hint at 100 TB)."""
-    from gexp_ml_dask_spark.llm.dedup import containment_pairs_auto
+    symmetric Jaccard under-scores; routed by the setsim_pairs gate
+    (inverted-index join under 20k docs, the size-oriented lossless
+    prefix filter when the probe finds a hot shingle)."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
 
-    return containment_pairs_auto(load_docs(spark, sf_dir), threshold=0.7, n=3)
+    return setsim_pairs(load_docs(spark, sf_dir), "containment", 0.7, n=3)
 
 
 @register("op_llm_02_containment_prefix", _CONTAINMENT_ORACLE)
 def op_llm_02_containment_prefix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OP-LLM-02 (containment, forced prefix strategy): the 100 TB
+    """OP-LLM-02 (containment, forced prefix route): the 100 TB
     physical form registered against the SAME oracle, so the driver
     value-checks the size-oriented prefix filter's losslessness
     itself (mirrors the jaccard/tf-cosine prefix twins)."""
-    from gexp_ml_dask_spark.llm.dedup import containment_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_prefix
 
-    return containment_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.7, n=3, strategy="prefix"
-    )
+    return setsim_prefix(load_docs(spark, sf_dir), "containment", 0.7, n=3)
 
 
 # Sparse term-frequency cosine between documents — the classic IR
@@ -3818,61 +3811,48 @@ _TF_COSINE_ORACLE = (
 @register("op_llm_02_tf_cosine", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-02 (TF cosine): doc-doc cosine over sparse term-
-    frequency vectors — the embedding-free IR similarity, routed
-    through the strategy gate WITH the vocabulary-density probe
-    (VERDICT r6 item 4): one bounded stats job measures posting
-    density over <=100k docs and routes dense corpora (vocab <= 4k,
-    density >= 0.2) to the exact tiled-GEMM form, Zipf corpora to the
-    inverted/prefix sparse forms. Since round 8 the probe is gated by
-    a small-corpus cheap-out (VERDICT r7 item 3): under
-    ``probe_min_docs`` (20k) documents, the inverted index finishes
-    in seconds regardless of density and the probe itself was the
-    dominant cost, so small corpora — including the driver fixtures
-    (500–5,000 docs) — route straight to the sparse resolution and
-    this entry times the gate's PRODUCTION small-input path. The
-    dense tiled-GEMM route keeps value evidence via
-    tests/test_llm_ops.py::test_dense_tf_cosine_identical_pairs (row
-    parity vs inverted on the probe-dense fixture) and the sf1 dense
-    bench in SCALING.md §2e; op_llm_02_tf_cosine_inverted/_prefix
-    keep the sparse forms value-checked against the SAME oracle. All
-    strategies emit identical rows by construction (integer-exact
-    dot + one shared finish), pinned in tests/test_llm_ops.py."""
-    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
+    frequency vectors — the embedding-free IR similarity — through the
+    setsim_pairs gate. Under GATE_MIN_DOCS (20k) documents, including
+    every driver fixture (500-5,000 docs), it takes the inverted route
+    without probing: there the inverted index finishes in seconds at
+    any density, and the probe itself used to dominate (27 s vs 9 s).
+    Above it one bounded probe routes dense corpora (vocab <= 4,096,
+    posting density >= 0.2) to the exact tiled-GEMM route and
+    hot-token corpora to the L2 prefix filter. The dense route keeps
+    value evidence via tests/test_llm_ops.py::
+    test_dense_tf_cosine_identical_pairs and the sf1 dense bench in
+    SCALING.md §2e; op_llm_02_tf_cosine_inverted/_prefix pin the sparse
+    routes against the SAME oracle. Every route emits identical rows
+    (integer-exact dot + one shared rounding)."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
 
-    return tf_cosine_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.9, probe=True
-    )
+    return setsim_pairs(load_docs(spark, sf_dir), "cosine", 0.9)
 
 
 @register("op_llm_02_tf_cosine_inverted", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine_inverted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OP-LLM-02 (TF cosine, forced inverted-index strategy): the
-    posting self-join form registered against the same oracle, so the
-    classic sparse route keeps independent driver evidence after the
-    auto gate started routing the (dense) driver fixtures to the
-    tiled-GEMM form."""
-    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
+    """OP-LLM-02 (TF cosine, forced inverted route): the posting
+    self-join registered against the same oracle, so the classic sparse
+    route keeps its own driver evidence whichever route the gate picks
+    for op_llm_02_tf_cosine."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_inverted
 
-    return tf_cosine_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.9, strategy="inverted"
-    )
+    return setsim_inverted(load_docs(spark, sf_dir), "cosine", 0.9)
 
 
 @register("op_llm_02_tf_cosine_prefix", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine_prefix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OP-LLM-02 (TF cosine, forced L2-prefix strategy): the 100 TB
+    """OP-LLM-02 (TF cosine, forced L2-prefix route): the 100 TB
     physical form registered as its own query against the SAME
     oracle, so the driver value-checks the prefix filter's
     losslessness itself (mirrors op_llm_02_ngram_jaccard_prefix)."""
-    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_prefix
 
-    return tf_cosine_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.9, strategy="prefix"
-    )
+    return setsim_prefix(load_docs(spark, sf_dir), "cosine", 0.9)
 
 
 @register(
@@ -4018,14 +3998,12 @@ def op_llm_02_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved into duplicate clusters via iterative connected
     components (label propagation + pointer jumping — the only
     legitimately iterative operator; see operators/graph.py). The
-    candidate stage goes through the lazy strategy gate, so at 100 TB
-    the prefix-filtered (hot-shingle-safe) form feeds the CC loop."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    candidate stage goes through the setsim_pairs gate, so on a large
+    hot-shingle corpus the prefix-filtered form feeds the CC loop."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
     from gexp_ml_dask_spark.operators.graph import dedup_clusters
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = setsim_pairs(load_docs(spark, sf_dir), "jaccard", 0.4, n=3)
     return dedup_clusters(pairs)
 
 
@@ -4061,11 +4039,11 @@ def op_llm_02_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (iterative CC over n-gram Jaccard pairs) anti-joined back onto
     the documents; the drop list is cluster-sized, so the anti-join
     broadcasts and the corpus never shuffles."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
     from gexp_ml_dask_spark.operators.graph import dedup_clusters
 
     docs = load_docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs_auto(docs, threshold=0.4, n=3)
+    pairs = setsim_pairs(docs, "jaccard", 0.4, n=3)
     clusters = dedup_clusters(pairs)
     drop = clusters.filter(F.col("doc_id") != F.col("component")).select(
         "doc_id"
@@ -4099,12 +4077,10 @@ def op_llm_02_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph — the cluster-density signal that separates tight
     duplicate cliques from chains; oriented low->high edges make two
     hash joins count each triangle exactly once."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
     from gexp_ml_dask_spark.operators.graph import triangle_count
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = setsim_pairs(load_docs(spark, sf_dir), "jaccard", 0.4, n=3)
     return triangle_count(pairs)
 
 
@@ -4150,14 +4126,12 @@ def op_llm_02_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement to connected components (CC merges everything
     touching; LPA splits weakly-bridged groups). Three unrolled
     rounds, integer-exact oracle, deterministic tie order."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
     from gexp_ml_dask_spark.operators.graph import (
         label_propagation_communities,
     )
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = setsim_pairs(load_docs(spark, sf_dir), "jaccard", 0.4, n=3)
     return label_propagation_communities(pairs, n_iter=3)
 
 
@@ -4201,12 +4175,10 @@ def op_llm_02_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled power-iteration rounds; per round one edge shuffle +
     one node-sized left join (operators/graph.py pagerank). The
     oracle replays the identical closed form as unrolled CTEs."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
     from gexp_ml_dask_spark.operators.graph import pagerank
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = setsim_pairs(load_docs(spark, sf_dir), "jaccard", 0.4, n=3)
     pr = pagerank(pairs, damping=0.85, n_iter=3)
     return pr.select(
         F.col("node").cast("long").alias("doc_id"),

@@ -36,9 +36,9 @@ def test_exact_dedup_removes_planted_dups(spark, docs):
 
 
 def test_ngram_jaccard_finds_planted_neardups(spark, docs):
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
+    from gexp_ml_dask_spark.llm.dedup import setsim_pairs
 
-    pairs = ngram_jaccard_pairs(docs, threshold=0.8, n=3).collect()
+    pairs = setsim_pairs(docs, "jaccard", 0.8, n=3).collect()
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     # each near-dup (text + ' zzz') must pair with its source at j>=0.8
     for doc_id in (3, 4, 5):
@@ -534,6 +534,21 @@ def test_kmeans_lloyd_matches_numpy_reference(spark):
         assert len({got[i][0] for i in ids}) == 1
 
 
+def test_kmeans_lloyd_id_column_named_like_a_cluster(spark):
+    """An id column named "0" must not collide with the per-cluster
+    distance columns the pivot produces: the assignments equal those
+    of the same vectors under the default id name."""
+    rows = [(i, [float(i % 3), float(i // 3), 1.0]) for i in range(12)]
+    from gexp_ml_dask_spark.llm.similarity import kmeans_lloyd
+
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = {tuple(r) for r in kmeans_lloyd(df, k=3, n_iter=2).collect()}
+    renamed = df.withColumnRenamed("vec_id", "0")
+    got = kmeans_lloyd(renamed, k=3, n_iter=2, id_col="0")
+    assert got.columns[0] == "0"
+    assert {tuple(r) for r in got.collect()} == want
+
+
 def test_constraint_report_counts_planted_violations(spark):
     """Every constraint kind counts its planted violations exactly:
     nulls, negatives, out-of-range, off-list values, duplicate keys,
@@ -960,6 +975,35 @@ def test_bigram_lm_scores_fluency_ordering(spark):
     assert abs(out[1]["avg_logp"] - round(3 / 5 * math.log(5 / 8), 6)) < 1e-9
 
 
+def test_bigram_lm_scores_subset_equals_score_then_join(spark, docs):
+    """score_docs scores a subset under the model fitted on ALL docs:
+    the rows equal scoring everything and inner-joining the subset."""
+    from gexp_ml_dask_spark.llm.text import bigram_lm_scores
+
+    subset = docs.filter(F.col("doc_id") % 3 == 0)
+    got = _rows(bigram_lm_scores(docs, score_docs=subset))
+    want = _rows(
+        bigram_lm_scores(docs).join(subset.select("doc_id"), "doc_id")
+    )
+    assert got == want and got
+
+
+def test_contamination_hits_equals_flagged_decontaminate(spark, docs):
+    """On unique doc ids, the hits-only probe equals decontaminate's
+    contaminated rows (the curation plans rely on this)."""
+    from gexp_ml_dask_spark.llm.dedup import contamination_hits, decontaminate
+
+    eval_docs = docs.filter(F.col("doc_id") % 7 == 0)
+    assert docs.select("doc_id").distinct().count() == docs.count()
+    got = _rows(contamination_hits(docs, eval_docs, n=3))
+    want = _rows(
+        decontaminate(docs, eval_docs, n=3)
+        .filter("is_contaminated")
+        .select("doc_id", "n_contaminated_ngrams")
+    )
+    assert got == want and got
+
+
 def test_random_projection_linear_and_deterministic(spark):
     from gexp_ml_dask_spark.llm.similarity import random_projection
 
@@ -1006,26 +1050,20 @@ def test_curation_full_gates_compose(spark, docs):
     assert tight.count() < full.count()
 
 
-def _pair_set(df):
-    return {
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()
-    }
+def _rows(df):
+    return {tuple(r) for r in df.collect()}
 
 
 def test_prefix_jaccard_identical_pairs(spark, docs):
-    """The AllPairs prefix-filtered form must produce the IDENTICAL
-    pair set (ids AND rounded jaccard) as the inverted-index join —
-    losslessness is a theorem, so this is exact set equality, at two
-    thresholds, on the corpus with planted exact + near duplicates.
-    This is the parity the dedup.py docstrings cite."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
+    """The AllPairs prefix route must produce the IDENTICAL pair set
+    (ids AND rounded jaccard) as the inverted route — losslessness is
+    a theorem, so this is exact set equality, at two thresholds, on
+    the corpus with planted exact + near duplicates."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_inverted, setsim_prefix
 
     for t in (0.4, 0.8):
-        inv = _pair_set(ngram_jaccard_pairs(docs, threshold=t, n=3))
-        pre = _pair_set(ngram_jaccard_pairs_prefix(docs, threshold=t, n=3))
+        inv = _rows(setsim_inverted(docs, "jaccard", t))
+        pre = _rows(setsim_prefix(docs, "jaccard", t))
         assert inv == pre, (t, inv ^ pre)
     assert inv  # exact dups exist at 0.8, so the sets are non-trivial
 
@@ -1051,15 +1089,10 @@ def hot_shingle_docs(spark):
 
 
 def test_prefix_jaccard_hot_shingle_lossless(spark, hot_shingle_docs):
-    from gexp_ml_dask_spark.llm.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
+    from gexp_ml_dask_spark.llm.dedup import setsim_inverted, setsim_prefix
 
-    inv = _pair_set(ngram_jaccard_pairs(hot_shingle_docs, threshold=0.5))
-    pre = _pair_set(
-        ngram_jaccard_pairs_prefix(hot_shingle_docs, threshold=0.5)
-    )
+    inv = _rows(setsim_inverted(hot_shingle_docs, "jaccard", 0.5))
+    pre = _rows(setsim_prefix(hot_shingle_docs, "jaccard", 0.5))
     assert inv == pre, inv ^ pre
     found = {(a, b) for a, b, _ in pre}
     for i in range(10):  # every planted near-dup pair is recovered
@@ -1067,70 +1100,51 @@ def test_prefix_jaccard_hot_shingle_lossless(spark, hot_shingle_docs):
 
 
 def test_prefix_jaccard_block_col_forwarding(spark, hot_shingle_docs):
-    """block_col composes identically in both physical forms: pairs
-    restricted to the same blocking key, full-set jaccard."""
+    """block_col composes identically in both sparse routes, for every
+    measure: pairs restricted to the same blocking key, full-set
+    scores, a strict subset of the unblocked pairs."""
     from gexp_ml_dask_spark.llm.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_auto,
-        ngram_jaccard_pairs_prefix,
+        MEASURES,
+        setsim_inverted,
+        setsim_prefix,
     )
 
     blocked = hot_shingle_docs.withColumn("blk", F.col("doc_id") % 2)
-    inv = _pair_set(
-        ngram_jaccard_pairs(blocked, threshold=0.5, block_col="blk")
-    )
-    pre = _pair_set(
-        ngram_jaccard_pairs_prefix(blocked, threshold=0.5, block_col="blk")
-    )
-    auto = _pair_set(
-        ngram_jaccard_pairs_auto(
-            blocked, threshold=0.5, block_col="blk", strategy="prefix"
-        )
-    )
-    assert inv == pre == auto
-    # blocking is a restriction of the unblocked pair set
-    unblocked = _pair_set(ngram_jaccard_pairs(blocked, threshold=0.5))
-    assert pre <= unblocked and len(pre) < len(unblocked)
+    for measure in MEASURES:
+        inv = _rows(setsim_inverted(blocked, measure, 0.5, block_col="blk"))
+        pre = _rows(setsim_prefix(blocked, measure, 0.5, block_col="blk"))
+        assert inv == pre, (measure, inv ^ pre)
+        unblocked = _rows(setsim_inverted(blocked, measure, 0.5))
+        assert pre < unblocked, measure
 
 
-def test_jaccard_auto_gate_is_lazy_and_routes(spark, hot_shingle_docs):
-    """The strategy gate must not launch a job at plan-build time,
-    and must route per explicit arg > session conf > size_hint."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        JACCARD_STRATEGY_CONF,
-        ngram_jaccard_pairs_auto,
-    )
+def _plan(df):
+    return df._jdf.queryExecution().toString()
 
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    plan_prefix = ngram_jaccard_pairs_auto(
-        hot_shingle_docs, threshold=0.5, strategy="prefix"
-    )
-    plan_inverted = ngram_jaccard_pairs_auto(
-        hot_shingle_docs, threshold=0.5, strategy="inverted"
-    )
-    assert tracker.getJobIdsForGroup(None) == before  # lazy: no job ran
-    # the prefix plan carries the row_number Window; the inverted
-    # plan has none — a cheap structural probe of which path was built
-    assert "Window" in plan_prefix._jdf.queryExecution().toString()
-    assert "Window" not in plan_inverted._jdf.queryExecution().toString()
 
-    spark.conf.set(JACCARD_STRATEGY_CONF, "prefix")
-    try:
-        via_conf = ngram_jaccard_pairs_auto(hot_shingle_docs, threshold=0.5)
-        assert "Window" in via_conf._jdf.queryExecution().toString()
-    finally:
-        spark.conf.unset(JACCARD_STRATEGY_CONF)
-    via_hint = ngram_jaccard_pairs_auto(
-        hot_shingle_docs, threshold=0.5, size_hint=10_000_000
-    )
-    assert "Window" in via_hint._jdf.queryExecution().toString()
-    default = ngram_jaccard_pairs_auto(hot_shingle_docs, threshold=0.5)
-    assert "Window" not in default._jdf.queryExecution().toString()
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs_auto(
-            hot_shingle_docs, threshold=0.5, strategy="bogus"
-        )
+def test_setsim_gate_routes_from_data(
+    spark, docs, hot_shingle_docs, monkeypatch
+):
+    """The one gate reads only the data. Below GATE_MIN_DOCS it builds
+    the inverted plan (no Window) without probing; with the cutoff
+    patched to 0 the probe routes the hot-shingle corpus to prefix for
+    every measure and the dense documents corpus to the tiled GEMM for
+    cosine — and every route's rows equal the inverted route's."""
+    from gexp_ml_dask_spark.llm import dedup
+
+    for measure in dedup.MEASURES:
+        plan = dedup.setsim_pairs(hot_shingle_docs, measure, 0.5)
+        assert "Window" not in _plan(plan)
+    monkeypatch.setattr(dedup, "GATE_MIN_DOCS", 0)
+    for measure in dedup.MEASURES:
+        routed = dedup.setsim_pairs(hot_shingle_docs, measure, 0.5)
+        assert "Window" in _plan(routed), measure
+        inv = _rows(dedup.setsim_inverted(hot_shingle_docs, measure, 0.5))
+        assert _rows(routed) == inv and inv, measure
+    routed = dedup.setsim_pairs(docs, "cosine", 0.7)
+    assert "FlatMapGroupsInPandas" in _plan(routed)
+    inv = _rows(dedup.setsim_inverted(docs, "cosine", 0.7))
+    assert _rows(routed) == inv and inv
 
 
 def test_remove_dup_spans_keeps_canonical_copy(spark):
@@ -1201,25 +1215,15 @@ def test_balanced_shards_token_totals_even(spark):
 
 
 def test_prefix_tf_cosine_identical_pairs(spark, docs):
-    """The L2-prefix-filtered TF cosine must produce the IDENTICAL
-    row set (ids AND rounded cosine) as the inverted-index join —
-    the Cauchy-Schwarz prefix bound is a theorem, so this is exact
-    set equality at two thresholds. This is the parity the dedup.py
-    docstrings cite."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_prefix,
-    )
+    """The L2-prefix route must produce the IDENTICAL row set (ids AND
+    rounded cosine) as the inverted route — the Cauchy-Schwarz prefix
+    bound is a theorem, so this is exact set equality at two
+    thresholds."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_inverted, setsim_prefix
 
     for t in (0.9, 0.7):
-        inv = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs(docs, threshold=t).collect()
-        }
-        pre = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs_prefix(docs, threshold=t).collect()
-        }
+        inv = _rows(setsim_inverted(docs, "cosine", t))
+        pre = _rows(setsim_prefix(docs, "cosine", t))
         assert inv == pre, (t, inv ^ pre)
     assert inv  # non-trivial at 0.7 on the planted-dup corpus
 
@@ -1228,96 +1232,58 @@ def test_prefix_tf_cosine_hot_vocab_lossless(spark, hot_shingle_docs):
     """Small shared vocabulary = every posting hot — the regime that
     GC-killed the unblocked join at sf0.1. The prefix index must
     still emit the identical pair set."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_prefix,
-    )
+    from gexp_ml_dask_spark.llm.dedup import setsim_inverted, setsim_prefix
 
-    inv = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in tf_cosine_pairs(hot_shingle_docs, threshold=0.8).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in tf_cosine_pairs_prefix(
-            hot_shingle_docs, threshold=0.8
-        ).collect()
-    }
+    inv = _rows(setsim_inverted(hot_shingle_docs, "cosine", 0.8))
+    pre = _rows(setsim_prefix(hot_shingle_docs, "cosine", 0.8))
     assert inv == pre and inv
 
 
-def test_dense_tf_cosine_identical_pairs(spark, docs):
-    """The tiled dense-GEMM TF cosine (the dense-corpus route, r7)
-    must produce the IDENTICAL row set as the inverted-index join at
-    two thresholds — the centroid-radius tile bound is the spherical
-    triangle inequality (lossless) and the dot is integer-exact, so
-    this is exact set equality. chunk_size=64 forces many tiles
-    (diagonal + off-diagonal + pruned)."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_dense,
-    )
+def test_dense_tf_cosine_identical_pairs(spark, docs, monkeypatch):
+    """The tiled dense-GEMM route must produce the IDENTICAL row set
+    as the inverted route at two thresholds — the tile bounds are
+    lossless and the dot is integer-exact. A 64-doc chunk forces many
+    tiles (diagonal + off-diagonal + pruned)."""
+    from gexp_ml_dask_spark.llm import dedup
 
+    monkeypatch.setattr(dedup, "DENSE_CHUNK", 64)
     for t in (0.9, 0.7):
-        inv = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs(docs, threshold=t).collect()
-        }
-        den = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs_dense(
-                docs, threshold=t, chunk_size=64
-            ).collect()
-        }
+        inv = _rows(dedup.setsim_inverted(docs, "cosine", t))
+        den = _rows(dedup.setsim_dense(docs, "cosine", t))
         assert inv == den, (t, inv ^ den)
     assert inv  # non-trivial at 0.7 on the planted-dup corpus
+    with pytest.raises(ValueError):  # cosine only
+        dedup.setsim_dense(docs, "jaccard", 0.7)
 
 
-def test_tf_cosine_auto_gate_boundary(spark, docs, hot_shingle_docs):
-    """The density-probed auto gate: the two fixtures straddle the
-    measured dense_min_density threshold (documents probe DENSE, the
-    Zipf hot-vocab corpus probes SPARSE), and on BOTH sides of the
-    boundary the probed route emits the exact inverted-join pair set
-    — flipping the gate never changes results (VERDICT r6 item 4)."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_auto,
-        tf_density_stats,
-    )
+def test_tf_cosine_auto_gate_boundary(
+    spark, docs, hot_shingle_docs, monkeypatch
+):
+    """The two fixtures straddle the dense thresholds (documents probe
+    DENSE, the hot-vocab corpus probes SPARSE), and on BOTH sides the
+    gate emits the exact inverted-route rows — flipping the gate never
+    changes results."""
+    from gexp_ml_dask_spark.llm import dedup
 
-    dense_stats = tf_density_stats(docs)
-    sparse_stats = tf_density_stats(hot_shingle_docs)
-    # the fixtures actually sit on opposite sides of the gate
-    assert dense_stats["density"] >= 0.2 and dense_stats["vocab"] <= 4096
-    assert sparse_stats["density"] < 0.2
+    dense = dedup._probe(docs, "cosine", 3, "doc_id", "text")
+    sparse = dedup._probe(hot_shingle_docs, "cosine", 3, "doc_id", "text")
+    assert dense["density"] >= dedup.DENSE_MIN_DENSITY
+    assert dense["vocab"] <= dedup.DENSE_MAX_VOCAB
+    assert sparse["density"] < dedup.DENSE_MIN_DENSITY
 
+    monkeypatch.setattr(dedup, "GATE_MIN_DOCS", 0)
     for corpus, t in ((docs, 0.7), (hot_shingle_docs, 0.8)):
-        inv = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs(corpus, threshold=t).collect()
-        }
-        auto = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs_auto(
-                # probe_min_docs=0 defeats the small-corpus cheap-out
-                # (r8) so this test still exercises the probe itself
-                corpus, threshold=t, probe=True, probe_min_docs=0
-            ).collect()
-        }
-        assert inv == auto and inv
+        inv = _rows(dedup.setsim_inverted(corpus, "cosine", t))
+        assert _rows(dedup.setsim_pairs(corpus, "cosine", t)) == inv and inv
 
 
-def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark):
+def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark, monkeypatch):
     """A heterogeneous corpus can PROBE dense (its low-id head is
     template text) while its global vocabulary exceeds the densify
     bound — the dense route then refuses, and the gate must fall back
-    to a sparse strategy instead of crashing (a misrouted gate is a
+    to a sparse route instead of crashing (a misrouted gate is a
     performance miss, never a correctness one)."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_auto,
-        tf_cosine_pairs_dense,
-    )
+    from gexp_ml_dask_spark.llm import dedup
 
     head = [
         (i, "alpha beta gamma delta " + ("alpha beta " * (i % 3)))
@@ -1328,84 +1294,27 @@ def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark):
         for i in range(100)
     ]
     corpus = spark.createDataFrame(head + tail, ["doc_id", "text"])
+    monkeypatch.setattr(dedup, "GATE_MIN_DOCS", 0)
+    monkeypatch.setattr(dedup, "PROBE_DOCS", 20)  # sees only the head
+    monkeypatch.setattr(dedup, "DENSE_MAX_VOCAB", 50)
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):  # the dense route itself refuses
-        tf_cosine_pairs_dense(corpus, max_vocab=50).collect()
-
-    inv = {
-        tuple(r)
-        for r in tf_cosine_pairs(corpus, threshold=0.9).collect()
-    }
-    auto = {
-        tuple(r)
-        for r in tf_cosine_pairs_auto(
-            corpus,
-            threshold=0.9,
-            probe=True,
-            probe_docs=20,  # the probe sees only the dense head
-            probe_min_docs=0,  # defeat the small-corpus cheap-out (r8)
-            dense_max_vocab=50,
-        ).collect()
-    }
-    assert auto == inv and inv  # fell back, identical results
-
-
-def test_tf_cosine_auto_gate_lazy_and_routed(spark, hot_shingle_docs):
-    """The strategy gate must build the requested plan without
-    running a job: the prefix plan contains the suffix-norm Window,
-    the inverted plan does not; conf and size_hint both route."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        TF_COSINE_STRATEGY_CONF,
-        tf_cosine_pairs_auto,
-    )
-
-    plan_pre = tf_cosine_pairs_auto(
-        hot_shingle_docs, threshold=0.8, strategy="prefix"
-    )
-    plan_inv = tf_cosine_pairs_auto(
-        hot_shingle_docs, threshold=0.8, strategy="inverted"
-    )
-    assert "Window" in plan_pre._jdf.queryExecution().toString()
-    assert "Window" not in plan_inv._jdf.queryExecution().toString()
-
-    spark.conf.set(TF_COSINE_STRATEGY_CONF, "prefix")
-    try:
-        via_conf = tf_cosine_pairs_auto(hot_shingle_docs, threshold=0.8)
-        assert "Window" in via_conf._jdf.queryExecution().toString()
-    finally:
-        spark.conf.unset(TF_COSINE_STRATEGY_CONF)
-    via_hint = tf_cosine_pairs_auto(
-        hot_shingle_docs, threshold=0.8, size_hint=10_000_000
-    )
-    assert "Window" in via_hint._jdf.queryExecution().toString()
-    with pytest.raises(ValueError):
-        tf_cosine_pairs_auto(hot_shingle_docs, threshold=0.8, strategy="bogus")
+    with pytest.raises(ValueError):  # the dense route itself refuses
+        dedup.setsim_dense(corpus, "cosine", 0.9).collect()
+    inv = _rows(dedup.setsim_inverted(corpus, "cosine", 0.9))
+    assert _rows(dedup.setsim_pairs(corpus, "cosine", 0.9)) == inv and inv
 
 
 def test_prefix_containment_identical_pairs(spark, docs, hot_shingle_docs):
-    """The size-oriented prefix-filtered containment must produce the
-    IDENTICAL pair set (ids AND rounded containment) as the
-    inverted-index join on both the planted-dup corpus and the
-    hot-shingle fixture — losslessness is a theorem."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        containment_pairs,
-        containment_pairs_prefix,
-    )
+    """The size-oriented prefix route for containment must produce the
+    IDENTICAL pair set (ids AND rounded containment) as the inverted
+    route on both the planted-dup corpus and the hot-shingle fixture
+    — losslessness is a theorem."""
+    from gexp_ml_dask_spark.llm.dedup import setsim_inverted, setsim_prefix
 
     for frame in (docs, hot_shingle_docs):
         for t in (0.7, 0.9):
-            inv = {
-                (r["id_a"], r["id_b"], r["containment"])
-                for r in containment_pairs(frame, threshold=t, n=3).collect()
-            }
-            pre = {
-                (r["id_a"], r["id_b"], r["containment"])
-                for r in containment_pairs_prefix(
-                    frame, threshold=t, n=3
-                ).collect()
-            }
+            inv = _rows(setsim_inverted(frame, "containment", t))
+            pre = _rows(setsim_prefix(frame, "containment", t))
             assert inv == pre, (t, inv ^ pre)
     assert inv  # hot-shingle fixture has planted near-subsets
 

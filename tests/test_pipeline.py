@@ -119,6 +119,29 @@ def test_classification_pipeline_learns(spark, gexp_data):
     assert var_cv >= 0.0
 
 
+def test_distributed_cc_then_classification_pipeline(spark, gexp_data):
+    """The distributed connected-components loop and a RandomForest
+    pipeline share one session: the CC convergence check must leave
+    the session serializable (an observe() there broke every later
+    tree-model transform() with "Task not serializable")."""
+    from gexp_ml_dask_spark.operators.graph import connected_components
+    from gexp_ml_dask_spark.plans import gexp_pipeline
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    )
+    comps = {
+        r["node"]: r["component"]
+        for r in connected_components(edges, driver_threshold=0).collect()
+    }
+    assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    gexp, labels, _ = gexp_data
+    _, _, eval_score = gexp_pipeline(
+        gexp, labels, "classification", k_folds=2, cv_parallelism=2
+    )
+    assert 0.0 <= eval_score <= 1.0
+
+
 def test_regression_pipeline_learns(spark, gexp_data):
     from gexp_ml_dask_spark.plans import gexp_pipeline
 

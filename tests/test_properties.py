@@ -661,87 +661,36 @@ def corpus_strategy(max_docs=8):
     return st.lists(text, min_size=2, max_size=max_docs)
 
 
+@pytest.mark.parametrize("measure", ["jaccard", "containment", "cosine"])
 @settings(max_examples=10, deadline=None)
-@given(corpus_strategy(), st.sampled_from([0.3, 0.5, 0.8]))
-def test_prefix_jaccard_lossless_property(spark, texts, threshold):
-    """ngram_jaccard_pairs_prefix must return the IDENTICAL pair set
-    (ids and rounded jaccard) as the inverted-index join on ANY
-    corpus at ANY threshold — losslessness is a theorem (AllPairs
-    prefix filtering), so a single counterexample is a bug."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
+@given(corpus_strategy(), st.sampled_from([0.3, 0.5, 0.7, 0.8, 0.9]))
+def test_setsim_routes_lossless_property(spark, measure, texts, threshold):
+    """Every route must return the IDENTICAL rows (ids and rounded
+    score) as the inverted route on ANY corpus at ANY threshold: the
+    AllPairs prefix bounds (rank-bound for Jaccard, own-size one-sided
+    for containment, Cauchy-Schwarz L2 for cosine) and the dense tile
+    bounds are theorems, so a single counterexample is a bug. A 3-doc
+    dense chunk spreads even tiny corpora over several tiles."""
+    from gexp_ml_dask_spark.llm import dedup
 
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    inv = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs(docs, threshold=threshold, n=2).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in ngram_jaccard_pairs_prefix(
-            docs, threshold=threshold, n=2
-        ).collect()
-    }
-    assert inv == pre, (threshold, texts, inv ^ pre)
 
+    def rows(route):
+        return {
+            tuple(r) for r in route(docs, measure, threshold, n=2).collect()
+        }
 
-@settings(max_examples=10, deadline=None)
-@given(corpus_strategy(), st.sampled_from([0.5, 0.7, 0.9]))
-def test_prefix_tf_cosine_lossless_property(spark, texts, threshold):
-    """tf_cosine_pairs_prefix must return the IDENTICAL row set (ids
-    and rounded cosine) as the inverted-index join on ANY corpus at
-    ANY threshold — the Cauchy-Schwarz L2-prefix bound is a theorem,
-    so a single counterexample is a bug. The tiny shared vocabulary
-    is the adversarial regime (every posting hot, long prefixes)."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_prefix,
-    )
-
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    inv = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in tf_cosine_pairs(docs, threshold=threshold).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in tf_cosine_pairs_prefix(docs, threshold=threshold).collect()
-    }
-    assert inv == pre, (threshold, texts, inv ^ pre)
-
-
-@settings(max_examples=10, deadline=None)
-@given(corpus_strategy(), st.sampled_from([0.5, 0.7, 0.9]))
-def test_prefix_containment_lossless_property(spark, texts, threshold):
-    """containment_pairs_prefix must return the IDENTICAL pair set as
-    the inverted-index join on ANY corpus at ANY threshold — the
-    size-oriented prefix bound (overlap >= t*min forces a match in
-    the smaller doc's own prefix) is a theorem."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        containment_pairs,
-        containment_pairs_prefix,
-    )
-
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    inv = {
-        (r["id_a"], r["id_b"], r["containment"])
-        for r in containment_pairs(docs, threshold=threshold, n=2).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"], r["containment"])
-        for r in containment_pairs_prefix(
-            docs, threshold=threshold, n=2
-        ).collect()
-    }
-    assert inv == pre, (threshold, texts, inv ^ pre)
+    inv = rows(dedup.setsim_inverted)
+    routes = [dedup.setsim_prefix]
+    if dedup.MEASURES[measure].dense:
+        routes.append(dedup.setsim_dense)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "DENSE_CHUNK", 3)
+        for route in routes:
+            got = rows(route)
+            assert inv == got, (route.__name__, threshold, texts, inv ^ got)
 
 
 @given(
@@ -778,6 +727,26 @@ def test_global_rank_matches_naive_window(spark, keys):
             ).collect()
         }
         assert got == naive, desc
+
+
+@given(
+    keys=st.lists(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=12)),
+        min_size=1,
+        max_size=100,
+    )
+)
+@settings(max_examples=5, deadline=None)
+def test_global_rank_total_col_equals_max_rank(spark, keys):
+    """total_col carries the frame's row count on every row: it equals
+    max(rank) computed separately."""
+    from gexp_ml_dask_spark.operators.sorts import global_rank
+
+    df = spark.createDataFrame(list(enumerate(keys)), "id LONG, k LONG")
+    out = global_rank(df, "k", "id", n_buckets=4, total_col="n").collect()
+    ranked = global_rank(df, "k", "id", n_buckets=4)
+    max_rk = ranked.agg(F.max("rank")).first()[0]
+    assert {r["n"] for r in out} == {max_rk} and max_rk == len(keys)
 
 
 def test_global_rank_all_tied_nan_and_null(spark):

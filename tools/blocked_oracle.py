@@ -300,7 +300,7 @@ def main() -> int:
         )
 
     graph_edge_guard: int | None = None
-    # strategy twins (tf_cosine auto/inverted/prefix, jaccard and
+    # route twins (tf_cosine gated/inverted/prefix, jaccard and
     # containment +_prefix) share ONE oracle SQL — computing the
     # per-block oracle digests once per distinct SQL instead of once
     # per query cuts the heaviest (quadratic) oracle work 3x
