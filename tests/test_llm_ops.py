@@ -1122,29 +1122,56 @@ def _plan(df):
     return df._jdf.queryExecution().toString()
 
 
-def test_setsim_gate_routes_from_data(
-    spark, docs, hot_shingle_docs, monkeypatch
-):
-    """The one gate reads only the data. Below GATE_MIN_DOCS it builds
-    the inverted plan (no Window) without probing; with the cutoff
-    patched to 0 the probe routes the hot-shingle corpus to prefix for
-    every measure and the dense documents corpus to the tiled GEMM for
-    cosine — and every route's rows equal the inverted route's."""
+def _jobs_for(spark, tag, fn):
+    """(result of fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _gate_jobs(spark, frame, measure, tag):
+    """Jobs the gate alone launches: the bounded count, plus the probe
+    once the count reaches GATE_MIN_DOCS."""
     from gexp_ml_dask_spark.llm import dedup
 
-    for measure in dedup.MEASURES:
-        plan = dedup.setsim_pairs(hot_shingle_docs, measure, 0.5)
-        assert "Window" not in _plan(plan)
-    monkeypatch.setattr(dedup, "GATE_MIN_DOCS", 0)
-    for measure in dedup.MEASURES:
-        routed = dedup.setsim_pairs(hot_shingle_docs, measure, 0.5)
-        assert "Window" in _plan(routed), measure
-        inv = _rows(dedup.setsim_inverted(hot_shingle_docs, measure, 0.5))
-        assert _rows(routed) == inv and inv, measure
-    routed = dedup.setsim_pairs(docs, "cosine", 0.7)
-    assert "FlatMapGroupsInPandas" in _plan(routed)
-    inv = _rows(dedup.setsim_inverted(docs, "cosine", 0.7))
-    assert _rows(routed) == inv and inv
+    def gate():
+        c = frame.select("doc_id").limit(dedup.GATE_MIN_DOCS).count()
+        if c >= dedup.GATE_MIN_DOCS:
+            dedup._probe(frame, measure, 3, "doc_id", "text")
+
+    return _jobs_for(spark, tag, gate)[1]
+
+
+def test_jaccard_auto_gate_is_lazy_and_routes(
+    spark, hot_shingle_docs, monkeypatch
+):
+    """For the set measures the gate runs only its own bounded jobs
+    while building the plan (the pair join waits for an action), and
+    routes from the data: below GATE_MIN_DOCS the inverted plan (no
+    Window); with the cutoff patched to 0 the hot-shingle probe picks
+    the prefix plan (row_number Window). Every route's rows equal the
+    inverted route's."""
+    from gexp_ml_dask_spark.llm import dedup
+
+    for cutoff, window in ((dedup.GATE_MIN_DOCS, False), (0, True)):
+        monkeypatch.setattr(dedup, "GATE_MIN_DOCS", cutoff)
+        for measure in ("jaccard", "containment"):
+            tag = f"setsim_gate_{measure}_{cutoff}"
+            routed, jobs = _jobs_for(
+                spark,
+                tag,
+                lambda: dedup.setsim_pairs(hot_shingle_docs, measure, 0.5),
+            )
+            assert jobs == _gate_jobs(
+                spark, hot_shingle_docs, measure, tag + "_ref"
+            ), (measure, cutoff)
+            assert ("Window" in _plan(routed)) == window, (measure, cutoff)
+            inv = _rows(dedup.setsim_inverted(hot_shingle_docs, measure, 0.5))
+            assert _rows(routed) == inv and inv, (measure, cutoff)
 
 
 def test_remove_dup_spans_keeps_canonical_copy(spark):
@@ -1275,6 +1302,38 @@ def test_tf_cosine_auto_gate_boundary(
     for corpus, t in ((docs, 0.7), (hot_shingle_docs, 0.8)):
         inv = _rows(dedup.setsim_inverted(corpus, "cosine", t))
         assert _rows(dedup.setsim_pairs(corpus, "cosine", t)) == inv and inv
+
+
+def test_tf_cosine_auto_gate_lazy_and_routed(
+    spark, docs, hot_shingle_docs, monkeypatch
+):
+    """Cosine through the one gate: below GATE_MIN_DOCS the inverted
+    plan is built with no job past the bounded count; with the cutoff
+    patched to 0 the hot-vocab corpus probes to the prefix plan (the
+    suffix-norm Window), again with no job past count and probe, and
+    the dense documents corpus probes to the tiled GEMM
+    (FlatMapGroupsInPandas). Each route's rows equal the inverted
+    route's."""
+    from gexp_ml_dask_spark.llm import dedup
+
+    for cutoff, window in ((dedup.GATE_MIN_DOCS, False), (0, True)):
+        monkeypatch.setattr(dedup, "GATE_MIN_DOCS", cutoff)
+        tag = f"tf_cosine_gate_{cutoff}"
+        routed, jobs = _jobs_for(
+            spark,
+            tag,
+            lambda: dedup.setsim_pairs(hot_shingle_docs, "cosine", 0.8),
+        )
+        assert jobs == _gate_jobs(
+            spark, hot_shingle_docs, "cosine", tag + "_ref"
+        ), cutoff
+        assert ("Window" in _plan(routed)) == window, cutoff
+        inv = _rows(dedup.setsim_inverted(hot_shingle_docs, "cosine", 0.8))
+        assert _rows(routed) == inv and inv, cutoff
+    routed = dedup.setsim_pairs(docs, "cosine", 0.7)
+    assert "FlatMapGroupsInPandas" in _plan(routed)
+    inv = _rows(dedup.setsim_inverted(docs, "cosine", 0.7))
+    assert _rows(routed) == inv and inv
 
 
 def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark, monkeypatch):
